@@ -59,21 +59,9 @@ PARSE_FORMATS = [
 ]
 
 
-def format_jira_time(ts: Column) -> Column:
-    """F3 — formatJIRATime (pkg/client/client.go:293-300)."""
-    return F.date_format(ts, JIRA_TIME_FMT)
-
-
 def parse_jira_time(s: Column) -> Column:
     """F4 — first format that parses wins; NULL if none do."""
     return F.coalesce(*[F.try_to_timestamp(s, F.lit(fmt)) for fmt in PARSE_FORMATS])
-
-
-# --- F5: checksum ----------------------------------------------------------
-
-def checksum256(content: Column) -> Column:
-    """sha-256 hex (pkg/state/manager.go:649-662)."""
-    return F.sha2(content, 256)
 
 
 # --- F6: conventional-commit formatting (pkg/git/git.go:293-358) -----------

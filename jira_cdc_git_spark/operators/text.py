@@ -64,13 +64,6 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table_spread(spark, "documents", sf_dir, "doc_id")
-    return docs.select(
-        "doc_id", F.explode(TX.shingles(F.col("text"), 3)).alias("shingle")
-    )
-
-
 def shingle_sets_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, shs, xs) from a (doc_id, text, ...) frame: distinct word
     3-gram shingle sets plus their per-shingle 32-bit digests (TX.hex32,

@@ -100,64 +100,6 @@ def _assign_clusters(emb: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_centroids(
-    emb: DataFrame, k: int = 16, iters: int = 3
-) -> DataFrame:
-    """Deterministic Lloyd's k-means over an embedding column — the real
-    trainer behind the IVF index (replaces the first-k-by-id centroid
-    stand-in). Init = first k vectors by vec_id; each iteration is one
-    narrow assignment pass + one mean-update shuffle.
-
-    The mean update posexplodes embeddings to (cluster, dim, val) rows and
-    averages per (cluster, dim) — at 100 TB that is a dims× row blowup but
-    it is the standard distributed formulation: partial aggregation makes
-    the shuffle k×dims rows regardless of corpus size. Empty clusters keep
-    their previous centroid. Iterations materialize (conf-selected) so lineage stays
-    flat (the driver loop is O(iters), like the hierarchy fixpoint J1)."""
-    cents = (
-        emb.orderBy("vec_id")
-        .limit(k)
-        .select(
-            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb")
-        )
-        .transform(materialize)
-    )
-    for _ in range(iters):
-        assigned = _assign_clusters(emb, cents)
-        means = (
-            assigned.select(
-                "cluster_id", F.posexplode(_as_double(F.col("embedding")))
-            )
-            .groupBy("cluster_id", "pos")
-            .agg(F.avg("col").alias("m"))
-            .groupBy("cluster_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("pm")
-            )
-            .select(
-                F.col("cluster_id").alias("cent_id"),
-                F.transform(
-                    F.col("pm"), lambda x: x.m.cast("float")
-                ).alias("cent_emb"),
-            )
-        )
-        # empty clusters: keep the previous centroid (left join fallback)
-        cents = (
-            cents.alias("old")
-            .join(means.alias("new"), "cent_id", "left_outer")
-            .select(
-                "cent_id",
-                F.coalesce(F.col("new.cent_emb"), F.col("old.cent_emb")).alias(
-                    "cent_emb"
-                ),
-            )
-            .transform(materialize)
-        )
-    return cents
-
-
 def _micro_l2(a: Column, b: Column) -> Column:
     """Exact integer L2² between two micro-unit arrays (each term
     ≤ 64·(2.2e6)² ≈ 3e14 < 2^53, so the double sum is exact and
@@ -394,7 +336,7 @@ def semdedup(
     always.
 
     Centroids are the deterministic first-n_centroids-by-vec_id stand-in
-    (same as ivf_topk; swap kmeans_centroids in for trained clusters) and
+    (same as ivf_topk; ivf_topk_kmeans shows the trained-cluster form) and
     assignment is the narrow broadcast pass of _assign_clusters. Like
     embedding_neardup, the synthetic corpus has no true near-dups, so one
     perturbed clone per 10th vector is unioned in; the expected drops are
@@ -1790,8 +1732,7 @@ def kmeans_assign(
 ) -> DataFrame:
     """Per-vector k-means cluster assignment after KMEANS_ITERS Lloyd
     iterations — the iterative trainer made ORACLE-EXACT by running
-    entirely in integer micro-units (see _micro_units). kmeans_centroids
-    keeps the float/cosine production form; this variant proves the
+    entirely in integer micro-units (see _micro_units), which proves the
     iteration algebra against an unrolled-CTE DuckDB oracle, the same
     upgrade pagerank_links got over a rows-only check.
 

@@ -109,8 +109,9 @@ def write_edges(edges: DataFrame, path: str, mode: str = "overwrite") -> None:
     edges.write.mode(mode).partitionBy("link_type", "direction").parquet(path)
 
 
-def commit_log_rows(issues: DataFrame) -> DataFrame:
-    """S8/F6/F7 — one commit row per synced issue."""
+def commit_log_rows(issues: DataFrame, *extra) -> DataFrame:
+    """S8/F6/F7 — one commit row per synced issue, plus any ``extra``
+    columns of the same issue row."""
     return issues.select(
         F.sha2(
             F.concat_ws("|", F.col("key"), F.col("updated").cast("string")), 256
@@ -138,6 +139,7 @@ def commit_log_rows(issues: DataFrame) -> DataFrame:
             F.col("key"),
             F.lit(".yaml"),
         ).alias("file_path"),
+        *extra,
     )
 
 

@@ -119,21 +119,17 @@ def _commit_stream(rows, continue_existing: bool = False) -> Iterator[bytes]:
 def _commit_frame(issues: DataFrame) -> DataFrame:
     """commit_log rows + the flat fields the YAML document needs, ordered
     deterministically (commit_ts, key) — the order the reference produces
-    by syncing sorted keys (jira_builder.go:222-225 ORDER BY injection)."""
-    log = sinks.commit_log_rows(issues)
-    flat = issues.select(
-        F.col("key").alias("__k"),
+    by syncing sorted keys (jira_builder.go:222-225 ORDER BY injection).
+    One projection per issue row, so each version of a key keeps its own
+    fields and commits exactly once."""
+    return sinks.commit_log_rows(
+        issues,
         "project_key",
         "summary",
         "issuetype",
         F.col("status.name").alias("status_name"),
         "updated",
-    )
-    return (
-        log.join(flat, log.key == flat.__k)
-        .drop("__k")
-        .orderBy("commit_ts", "key")
-    )
+    ).orderBy("commit_ts", "key")
 
 
 def _fast_import_rows(rows, repo_dir: str) -> int:

@@ -65,9 +65,8 @@ def _recover_dir(live: str) -> None:
 
 def merge_updates(synced: DataFrame) -> DataFrame:
     """Latest-per-key dedup + the MERGE update projection (u_key /
-    u_project / u_updated / u_checksum / u_path) — shared by the
-    join-rewrite MERGE below and the Delta ``MERGE INTO`` backend
-    (state_delta.py), so both upsert byte-identical values."""
+    u_project / u_updated / u_checksum / u_path) used by the join-rewrite
+    MERGE below."""
     w = Window.partitionBy("key").orderBy(F.col("updated").desc())
     synced = (
         synced.withColumn("__rn", F.row_number().over(w))

@@ -22,12 +22,13 @@ watermark) shares its expressions with the batch operator
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jira_cdc_git_spark import sinks
+from jira_cdc_git_spark import sinks, state
 from jira_cdc_git_spark.state import SyncStateStore
 
 
@@ -48,6 +49,140 @@ def read_append_sink(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read an ``_append_batch_idempotent`` sink without the bookkeeping
     partition column."""
     return spark.read.parquet(out_dir).drop("batch_id")
+
+
+def _drain(
+    spark: SparkSession,
+    source_dir: str,
+    schema,
+    checkpoint_dir: str,
+    body=None,
+    *,
+    max_files_per_trigger: int | None = None,
+    shape=None,
+    out_dir: str | None = None,
+) -> None:
+    """The drain layer under every streaming entry point: a parquet
+    file-source ``readStream`` drained once under ``Trigger.AvailableNow``
+    (everything currently in the feed, then stop) and awaited.
+
+    ``max_files_per_trigger`` is the C10 backpressure knob: it bounds
+    each micro-batch (and gives crash tests real batch boundaries to die
+    between). ``body(batch_df, batch_id)`` runs per micro-batch through
+    ``foreachBatch``; without a body, ``shape(feed)`` appends to a parquet
+    file sink at ``out_dir`` — the form the built-in stateful operators
+    (watermarked aggregation, dedup, applyInPandasWithState) need."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    feed = reader.parquet(source_dir)
+    if body is not None:
+        writer = feed.writeStream.foreachBatch(body)
+    else:
+        writer = (
+            shape(feed)
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out_dir)
+        )
+    (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _drain_stateful(
+    spark: SparkSession,
+    source_dir: str,
+    schema,
+    checkpoint_dir: str,
+    *,
+    states: dict[str, str],
+    fold,
+    snapshots: dict | None = None,
+    max_files_per_trigger: int | None = None,
+) -> None:
+    """The stateful layer on top of ``_drain``: the exactly-once fold of
+    micro-batches into directory-backed state tables, shared by every
+    stateful streaming twin. A twin supplies only its fold and its
+    snapshot projections.
+
+    ``states`` maps each state dir to the DDL of its empty initial table,
+    in commit order. ``fold(batch_df, batch_id, *carried)`` receives the
+    batch and the committed table of every state dir (declaration order)
+    and returns the new state — a tuple when there are several dirs. Any
+    batch_id-partitioned emission (``_append_batch_idempotent``) happens
+    inside the fold, before the state commits. ``snapshots`` maps each
+    snapshot dir to a projection over the committed state tables.
+
+    Per non-empty batch: heal every dir, read each state table and its
+    marker, fold (if any dir still needs this batch), swap each due state
+    dir in declaration order, then swap each snapshot dir.
+
+    Replay-safe: the fold is NOT naturally idempotent — re-folding a batch
+    after a crash between the swap and the checkpoint commit would
+    double-count — so every state table carries the last applied batch id
+    in an ``applied_batch_id`` column. Because the marker rides inside the
+    atomically swapped directory (``state._swap_dir_atomic``'s crash-safe
+    .bak rotation), data and marker commit as one unit; a replayed batch
+    (id <= marker) skips the fold. Batch ids are monotonic per checkpoint,
+    and a fresh checkpoint restarts at 0, whose replays are likewise <=
+    the stored marker. The guard is per dir, so a crash between two state
+    swaps re-folds the batch ONLY into the dir that missed it. Snapshots
+    recompute UNCONDITIONALLY from committed state (same state in, same
+    snapshot out), so a replay also heals a torn snapshot emit.
+
+    A crash between a swap's two renames leaves only ``<dir>.bak``:
+    ``state._recover_dir`` restores it before the batch reads the dir (or
+    the twin would silently reinitialize from empty state), and once more
+    before the stream starts — under availableNow no batch fires when no
+    new data arrived, so a torn FINAL swap would otherwise strand readers.
+    """
+    snapshots = snapshots or {}
+    dirs = [*states, *snapshots]
+
+    def _step(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        for d in dirs:
+            state._recover_dir(d)
+        carried, due = [], []
+        for d, ddl in states.items():
+            if os.path.isdir(d):
+                table = spark.read.parquet(d)
+                last = table.agg(F.max("applied_batch_id")).first()[0]
+                carried.append(table.drop("applied_batch_id"))
+            else:
+                last = None
+                carried.append(spark.createDataFrame([], ddl))
+            due.append(last is None or batch_id > last)
+        if any(due):
+            folded = fold(batch_df, batch_id, *carried)
+            if isinstance(folded, DataFrame):
+                folded = (folded,)
+            for d, new, todo in zip(states, folded, due):
+                if todo:
+                    stamped = new.withColumn("applied_batch_id", F.lit(batch_id))
+                    state._swap_dir_atomic(stamped.localCheckpoint(), d)
+        if snapshots:
+            committed = [
+                spark.read.parquet(d).drop("applied_batch_id") for d in states
+            ]
+            for d, project in snapshots.items():
+                state._swap_dir_atomic(project(*committed).localCheckpoint(), d)
+
+    for d in dirs:
+        state._recover_dir(d)
+    _drain(
+        spark,
+        source_dir,
+        schema,
+        checkpoint_dir,
+        _step,
+        max_files_per_trigger=max_files_per_trigger,
+    )
 
 
 def incremental_sync_batch(
@@ -78,27 +213,33 @@ def incremental_sync_batch(
     now = now or datetime.now(timezone.utc).replace(tzinfo=None)
     start = now
     changes = store.filter_changes(spark, batch, force=force)
-    # A10/C12 progress metrics: df.observe rides along with the count
-    # action — no extra pass (the Spark-native replacement for the
-    # reference's progress channel, internal/sync/batch.go:62-71,349-419)
-    obs = Observation("sync_progress")
-    changes = changes.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(F.col("change_type") == "new", 1).otherwise(0)).alias(
-            "new_rows"
-        ),
-    )
     # one pass over the (small) change set feeds three sinks + the MERGE —
     # persist instead of recomputing the filter join four times
     changes.persist()
     try:
-        n = changes.count()
-        metrics = obs.get
+        # A10/C12 progress metrics from the one action that fills the cache
+        # (the Spark-native replacement for the reference's progress
+        # channel, internal/sync/batch.go:62-71,349-419). They count
+        # distinct (key, updated) versions: at-least-once delivery can hand
+        # one poll the same issue-version twice, and that is one change.
+        version = F.struct("key", "updated")
+        stats = changes.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.count_distinct(version).alias("versions"),
+            F.count_distinct(
+                F.when(F.col("change_type") == "new", version)
+            ).alias("new"),
+        ).first()
+        if stats["versions"] < stats["rows"]:
+            # dedup only when needed: its shuffle spreads the change set
+            # over more partitions, and so over more sink files
+            deduped = changes.dropDuplicates(["key", "updated"]).persist()
+            changes.unpersist()
+            changes = deduped
+        n = stats["versions"]
         counts = {"total": n, "processed": 0 if dry_run else n,
                   "successful": 0 if dry_run else n, "failed": 0,
-                  "skipped": 0, "errors": 0,
-                  "new": int(metrics.get("new_rows") or 0)}
+                  "skipped": 0, "errors": 0, "new": stats["new"]}
         if dry_run or n == 0:
             store.record_operation(
                 spark, "incremental", "completed", start, now, counts
@@ -217,20 +358,17 @@ def run_incremental_stream(
     (pkg/ratelimit/ratelimit.go:52-210) for the file-feed path; a live
     JIRA connector would wrap its HTTP client with
     functions/scalar.backoff_ms on 429s."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(changes_dir)
 
     def _body(batch_df: DataFrame, batch_id: int) -> None:
         incremental_sync_batch(spark, batch_df, store, out_root, now=now)
 
-    (
-        feed.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        spark,
+        changes_dir,
+        schema,
+        checkpoint_dir,
+        _body,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -385,27 +523,22 @@ def streaming_sessionize(
         if closed:
             yield pd.DataFrame(closed)
 
-    feed = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
-        .withWatermark("ts", watermark)
-        .select("user_id", "ts", "value")
-    )
-    sessions = feed.groupBy("user_id").applyInPandasWithState(
-        fn,
-        SESSION_OUT_SCHEMA,
-        _SESSION_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-    (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    def _sessions(feed: DataFrame) -> DataFrame:
+        return (
+            feed.withWatermark("ts", watermark)
+            .select("user_id", "ts", "value")
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                fn,
+                SESSION_OUT_SCHEMA,
+                _SESSION_STATE_SCHEMA,
+                "append",
+                GroupStateTimeout.EventTimeTimeout,
+            )
+        )
+
+    _drain(
+        spark, events_dir, schema, checkpoint_dir, shape=_sessions, out_dir=out_dir
     )
 
 
@@ -453,15 +586,7 @@ def streaming_topk(
             batch_id,
         )
 
-    (
-        spark.readStream.schema(schema)
-        .parquet(queries_dir)
-        .writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(spark, queries_dir, schema, checkpoint_dir, _score)
 
 
 def streaming_exact_dedup(
@@ -481,25 +606,15 @@ def streaming_exact_dedup(
     the classic streaming OOM)."""
     from jira_cdc_git_spark.functions.text import fingerprint
 
-    feed = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .withWatermark("event_ts", watermark)
-    )
-    deduped = (
-        feed.withColumn("fp", fingerprint(F.col("text")))
-        .dropDuplicatesWithinWatermark(["fp"])
-        .select("doc_id", "fp", "event_ts")
-    )
-    (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    def _dedup(feed: DataFrame) -> DataFrame:
+        return (
+            feed.withWatermark("event_ts", watermark)
+            .withColumn("fp", fingerprint(F.col("text")))
+            .dropDuplicatesWithinWatermark(["fp"])
+            .select("doc_id", "fp", "event_ts")
+        )
+
+    _drain(spark, docs_dir, schema, checkpoint_dir, shape=_dedup, out_dir=out_dir)
 
 
 def streaming_tumbling_hourly(
@@ -514,22 +629,15 @@ def streaming_tumbling_hourly(
     tumbling event-time windows with a late-data watermark, complete-once
     via AvailableNow to a parquet sink (append mode: only windows the
     watermark has closed are emitted)."""
-    feed = spark.readStream.schema(schema).parquet(events_dir)
-    agg = (
-        feed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(F.col("w.start").alias("hour_ts"), "event_type", "n", "total_value")
-    )
-    (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    def _hourly(feed: DataFrame) -> DataFrame:
+        return (
+            feed.withWatermark("ts", watermark)
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
+            .select(F.col("w.start").alias("hour_ts"), "event_type", "n", "total_value")
+        )
+
+    _drain(spark, events_dir, schema, checkpoint_dir, shape=_hourly, out_dir=out_dir)
 
 
 def streaming_curation(
@@ -551,20 +659,12 @@ def streaming_curation(
     watermark state accrues)."""
     from jira_cdc_git_spark.operators.text import curate_frame
 
-    feed = spark.readStream.schema(schema).parquet(docs_dir)
-
     def _body(batch_df: DataFrame, batch_id: int) -> None:
         _append_batch_idempotent(
             curate_frame(batch_df, bench_grams), out_dir, batch_id
         )
 
-    (
-        feed.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(spark, docs_dir, schema, checkpoint_dir, _body)
 
 
 def streaming_phash_dedup(
@@ -602,8 +702,6 @@ def streaming_phash_dedup(
         "band_key",
     )
 
-    feed = spark.readStream.schema(schema).parquet(media_dir)
-
     def _match(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -625,13 +723,7 @@ def streaming_phash_dedup(
             batch_id,
         )
 
-    (
-        feed.writeStream.foreachBatch(_match)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(spark, media_dir, schema, checkpoint_dir, _match)
 
 
 def streaming_ivm_counts(
@@ -644,39 +736,17 @@ def streaming_ivm_counts(
     """Streaming twin of ivm_status_counts: each micro-batch of issues
     folds its partial (project, status) counts into the persistent counts
     table by algebraic merge — read current, union the batch's partials,
-    re-aggregate, atomically swap (the crash-safe .bak rotation from
-    state._swap_dir_atomic). The maintained table equals a full recompute
-    over everything streamed so far at every trigger — the IVM contract,
-    asserted by the batch-parity test.
-
-    Replay-safe (round-3 advice): the fold is NOT naturally idempotent —
-    re-folding a batch after a crash between the swap and the checkpoint
-    commit would double-count — so the table carries the last applied
-    batch_id in an `applied_batch_id` column. Because the marker rides
-    inside the atomically-swapped directory, data and marker commit as one
-    unit; a replayed batch (id <= marker) is skipped. Batch ids are
-    monotonic per checkpoint, and a fresh checkpoint restarts at 0, whose
-    replays are likewise <= the stored marker.
+    re-aggregate, atomically swap (``_drain_stateful``). The maintained
+    table equals a full recompute over everything streamed so far at
+    every trigger — the IVM contract, asserted by the batch-parity test.
 
     100 TB shape: per batch the expensive aggregation touches ONLY the
     batch (map-side partial); the merge re-reads a group-cardinality-
     sized table, not history. (On Delta/Iceberg the swap becomes a MERGE;
     the parquet-dir swap is the dependency-free equivalent.)"""
-    import os
+    keys = ["project_key", "status_name"]
 
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
-
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # one micro-batch per file: the
-        # fold is exercised repeatedly, not collapsed into one batch
-        .parquet(issues_dir)
-    )
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        keys = ["project_key", "status_name"]
+    def _fold(batch_df: DataFrame, batch_id: int, counts: DataFrame):
         partial = (
             batch_df.select(
                 "project_key", F.col("status.name").alias("status_name")
@@ -684,30 +754,24 @@ def streaming_ivm_counts(
             .groupBy(*keys)
             .agg(F.count("*").alias("n_issues"))
         )
-        # same .bak-only crash window as the state twins (r9 advice)
-        _recover_dir(counts_dir)
-        if os.path.isdir(counts_dir):
-            current = spark.read.parquet(counts_dir)
-            last_applied = current.agg(F.max("applied_batch_id")).first()[0]
-            if last_applied is not None and batch_id <= last_applied:
-                return  # at-least-once replay of an already-folded batch
-            merged = (
-                current.drop("applied_batch_id")
-                .unionByName(partial)
-                .groupBy(*keys)
-                .agg(F.sum("n_issues").alias("n_issues"))
-            )
-        else:
-            merged = partial
-        merged = merged.withColumn("applied_batch_id", F.lit(batch_id))
-        _swap_dir_atomic(merged.localCheckpoint(), counts_dir)
+        return (
+            counts.unionByName(partial)
+            .groupBy(*keys)
+            .agg(F.sum("n_issues").alias("n_issues"))
+        )
 
-    (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_stateful(
+        spark,
+        issues_dir,
+        schema,
+        checkpoint_dir,
+        states={
+            counts_dir: "project_key string, status_name string, n_issues long"
+        },
+        fold=_fold,
+        # one micro-batch per file: the fold is exercised repeatedly, not
+        # collapsed into one batch
+        max_files_per_trigger=1,
     )
 
 
@@ -738,8 +802,6 @@ def streaming_anomalies(
         .localCheckpoint()
     )
 
-    feed = spark.readStream.schema(schema).parquet(events_dir)
-
     def _score(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -760,13 +822,7 @@ def streaming_anomalies(
             batch_id,
         )
 
-    (
-        feed.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(spark, events_dir, schema, checkpoint_dir, _score)
 
 
 def lsh_match_frame(
@@ -854,8 +910,6 @@ def streaming_lsh_neardup(
         )
     )
 
-    feed = spark.readStream.schema(schema).parquet(docs_dir)
-
     def _match(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -866,13 +920,7 @@ def streaming_lsh_neardup(
             batch_id,
         )
 
-    (
-        feed.writeStream.foreachBatch(_match)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(spark, docs_dir, schema, checkpoint_dir, _match)
 
 
 def admission_frame(
@@ -974,14 +1022,6 @@ def streaming_corpus_admission(
     )
     bench_grams = materialize(bench_grams)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        # C10 backpressure (same knob as run_incremental_stream): bound
-        # each micro-batch — and give crash-recovery tests real batch
-        # boundaries to die between
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(docs_dir)
-
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -998,12 +1038,13 @@ def streaming_corpus_admission(
             batch_id,
         )
 
-    (
-        feed.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        spark,
+        docs_dir,
+        schema,
+        checkpoint_dir,
+        _admit,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -1117,15 +1158,7 @@ def streaming_ivf_topk(
             batch_id,
         )
 
-    (
-        spark.readStream.schema(schema)
-        .parquet(queries_dir)
-        .writeStream.foreachBatch(_serve)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(spark, queries_dir, schema, checkpoint_dir, _serve)
 
 
 def streaming_dsir_admission(
@@ -1165,11 +1198,6 @@ def streaming_dsir_admission(
     hist = materialize(hist)
     totals = materialize(totals)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(docs_dir)
-
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -1191,12 +1219,13 @@ def streaming_dsir_admission(
             batch_id,
         )
 
-    (
-        feed.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        spark,
+        docs_dir,
+        schema,
+        checkpoint_dir,
+        _admit,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -1234,11 +1263,6 @@ def streaming_mad_anomalies(
         mad_thresholds(load_table(spark, "events", corpus_sf_dir))
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(events_dir)
-
     def _flag(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -1254,12 +1278,13 @@ def streaming_mad_anomalies(
             batch_id,
         )
 
-    (
-        feed.writeStream.foreachBatch(_flag)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        spark,
+        events_dir,
+        schema,
+        checkpoint_dir,
+        _flag,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -1284,10 +1309,8 @@ def streaming_cusum(
     anywhere — watermark-style hour-close semantics), finalize every
     hour strictly before each type's newest hour, emit its exact
     integer-unit CUSUM row, and carry forward {c_u, floor_u, newest
-    hour's partial count}. Emissions and the state swap are
-    replay-safe: batch_id-partitioned idempotent sinks + the
-    applied_batch_id marker riding inside the atomically-swapped state
-    dir (the IVM-counts contract).
+    hour's partial count}. Emissions go to batch_id-partitioned
+    idempotent sinks; the state swap follows ``_drain_stateful``.
 
     Parity: the emitted rows equal the batch operator's output
     restricted to each type's closed hours, REGARDLESS of how the feed
@@ -1301,8 +1324,7 @@ def streaming_cusum(
     only, a broadcast join against a |types|-row state frame, one
     window over |types| x |hours-in-batch| rows; history is never
     re-read."""
-    import os
-
+    from jira_cdc_git_spark.functions.text import round_half_up as _rhu
     from jira_cdc_git_spark.operators.timeseries import (
         CUSUM_H,
         CUSUM_K,
@@ -1310,7 +1332,6 @@ def streaming_cusum(
     )
     from jira_cdc_git_spark.materialize import materialize
     from jira_cdc_git_spark.sources.registry import load_table
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
 
     hourly_corpus = (
         load_table(spark, "events", corpus_sf_dir)
@@ -1326,16 +1347,8 @@ def streaming_cusum(
             F.count("*").alias("cnt"),
         )
     )
-    state_dir = f"{out_root}/cusum_state"
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(events_dir)
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int, carried: DataFrame):
         batch_hourly = (
             batch_df.groupBy(
                 "event_type",
@@ -1343,32 +1356,17 @@ def streaming_cusum(
             )
             .agg(F.count("*").cast("long").alias("n"))
         )
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing, or the twin silently
-        # reinitializes from empty state (r9 advice)
-        _recover_dir(state_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            if last_applied is not None and batch_id <= last_applied:
-                return
-            pending = state.filter(F.col("pending_hour").isNotNull()).select(
-                "event_type",
-                F.col("pending_hour").alias("hour_ts"),
-                F.col("pending_n").alias("n"),
-            )
-            merged = (
-                batch_hourly.unionByName(pending)
-                .groupBy("event_type", "hour_ts")
-                .agg(F.sum("n").cast("long").alias("n"))
-            )
-            carry = state.select("event_type", "c_u", "floor_u")
-        else:
-            merged = batch_hourly
-            carry = spark.createDataFrame(
-                [], "event_type string, c_u long, floor_u long"
-            )
-        merged = materialize(merged)
+        pending = carried.filter(F.col("pending_hour").isNotNull()).select(
+            "event_type",
+            F.col("pending_hour").alias("hour_ts"),
+            F.col("pending_n").alias("n"),
+        )
+        merged = materialize(
+            batch_hourly.unionByName(pending)
+            .groupBy("event_type", "hour_ts")
+            .agg(F.sum("n").cast("long").alias("n"))
+        )
+        carry = carried.select("event_type", "c_u", "floor_u")
         newest = merged.groupBy("event_type").agg(
             F.max("hour_ts").alias("newest_hour")
         )
@@ -1407,8 +1405,6 @@ def streaming_cusum(
                 F.col("floor_abs").alias("floor_u"),
             )
         )
-        from jira_cdc_git_spark.functions.text import round_half_up as _rhu
-
         emit = finalized.select(
             "event_type",
             "hour_ts",
@@ -1444,31 +1440,27 @@ def streaming_cusum(
                 F.first("floor_u0").alias("floor_u0"),
             )
         )
-        new_state = (
-            open_part.join(last_fin, "event_type", "left")
-            .select(
-                "event_type",
-                F.coalesce("c_u", "c_u0").alias("c_u"),
-                F.coalesce("floor_u", "floor_u0").alias("floor_u"),
-                "pending_hour",
-                "pending_n",
-            )
-            .withColumn("applied_batch_id", F.lit(batch_id))
+        return open_part.join(last_fin, "event_type", "left").select(
+            "event_type",
+            F.coalesce("c_u", "c_u0").alias("c_u"),
+            F.coalesce("floor_u", "floor_u0").alias("floor_u"),
+            "pending_hour",
+            "pending_n",
         )
-        _swap_dir_atomic(new_state.localCheckpoint(), state_dir)
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir,):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_stateful(
+        spark,
+        events_dir,
+        schema,
+        checkpoint_dir,
+        states={
+            f"{out_root}/cusum_state": (
+                "event_type string, c_u long, floor_u long, "
+                "pending_hour timestamp, pending_n long"
+            )
+        },
+        fold=_fold,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -1492,46 +1484,21 @@ def streaming_debounce(
     Same batch-operator semantics (the one-pass lag form): the window
     anchors on the previous RAW event, kept or not, so a burst's second
     and third hits are both suppressed by their immediate predecessor.
-    Replay-safe via batch_id-partitioned sinks + the applied_batch_id
-    marker in the swapped state dir. Assumes per-(user, type)
-    monotone arrival order across batches (the hour-monotone watermark
-    assumption, one key finer).
+    Emissions go to batch_id-partitioned sinks; the state swap follows
+    ``_drain_stateful``. Assumes per-(user, type) monotone arrival order
+    across batches (the hour-monotone watermark assumption, one key
+    finer).
 
     100 TB shape: per batch one (user, type)-key window over the batch
     plus a join against the |users x types|-bounded state table; the
     sinks are append-only."""
-    import os
-
     from jira_cdc_git_spark.operators.timeseries import DEBOUNCE_S
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
 
     if debounce_s is None:
         debounce_s = DEBOUNCE_S
-    state_dir = f"{out_root}/debounce_state"
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(events_dir)
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int, carry: DataFrame):
         batch = batch_df.localCheckpoint()
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing, or the twin silently
-        # reinitializes from empty state (r9 advice)
-        _recover_dir(state_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            if last_applied is not None and batch_id <= last_applied:
-                return
-            carry = state.select("user_id", "event_type", "last_ts")
-        else:
-            carry = spark.createDataFrame(
-                [], "user_id long, event_type string, last_ts long"
-            )
         w = Window.partitionBy("user_id", "event_type").orderBy(
             "ts", "event_id"
         )
@@ -1562,26 +1529,24 @@ def streaming_debounce(
             flagged.groupBy("user_id", "event_type")
             .agg(F.max(tsl).alias("last_ts"))
         )
-        merged = (
+        return (
             carry.unionByName(new_last)
             .groupBy("user_id", "event_type")
             .agg(F.max("last_ts").alias("last_ts"))
-            .withColumn("applied_batch_id", F.lit(batch_id))
         )
-        _swap_dir_atomic(merged.localCheckpoint(), state_dir)
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir,):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_stateful(
+        spark,
+        events_dir,
+        schema,
+        checkpoint_dir,
+        states={
+            f"{out_root}/debounce_state": (
+                "user_id long, event_type string, last_ts long"
+            )
+        },
+        fold=_fold,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -1609,43 +1574,13 @@ def streaming_rolling_median(
     retro-revised (r7 ADVICE: previously such rows silently revised
     state that emitted medians no longer reflected).
 
-    Replay-safe: batch_id-partitioned sink + applied_batch_id marker in
-    the atomically-swapped state dir (the IVM contract).
-
     100 TB shape: per batch one partial agg to |types × batch-days|
     rows, a merge against the |types × days|-bounded state table, and
     windows over that state table only — never over raw events."""
-    import os
+    from jira_cdc_git_spark.functions.text import round_half_up as _r
 
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
-
-    state_dir = f"{out_root}/median_state"
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(events_dir)
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int, carry: DataFrame):
         batch = batch_df.localCheckpoint()
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing, or the twin silently
-        # reinitializes from empty state (r9 advice)
-        _recover_dir(state_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            if last_applied is not None and batch_id <= last_applied:
-                return
-            carry = state.select("event_type", "day", "cents", "emitted")
-        else:
-            carry = spark.createDataFrame(
-                [],
-                "event_type string, day timestamp, cents long, "
-                "emitted boolean",
-            )
         bagg = (
             batch.groupBy(
                 "event_type", F.date_trunc("DAY", F.col("ts")).alias("day")
@@ -1686,8 +1621,6 @@ def streaming_rolling_median(
             .orderBy("day")
             .rowsBetween(-(window_rows - 1), 0)
         )
-        from jira_cdc_git_spark.functions.text import round_half_up as _r
-
         scored = merged.select(
             "event_type",
             "day",
@@ -1706,31 +1639,26 @@ def streaming_rolling_median(
         closed = to_emit.select("event_type", "day").withColumn(
             "now_emitted", F.lit(True)
         )
-        new_state = (
-            merged.join(closed, ["event_type", "day"], "left")
-            .select(
-                "event_type",
-                "day",
-                "cents",
-                (F.col("emitted") | F.coalesce("now_emitted", F.lit(False))
-                 ).alias("emitted"),
-            )
-            .withColumn("applied_batch_id", F.lit(batch_id))
+        return merged.join(closed, ["event_type", "day"], "left").select(
+            "event_type",
+            "day",
+            "cents",
+            (F.col("emitted") | F.coalesce("now_emitted", F.lit(False))
+             ).alias("emitted"),
         )
-        _swap_dir_atomic(new_state.localCheckpoint(), state_dir)
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir,):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_stateful(
+        spark,
+        events_dir,
+        schema,
+        checkpoint_dir,
+        states={
+            f"{out_root}/median_state": (
+                "event_type string, day timestamp, cents long, emitted boolean"
+            )
+        },
+        fold=_fold,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -1752,134 +1680,96 @@ def streaming_transition_entropy(
     user (the debounce/cusum posture).
 
     ONE state table holds both kinds of rows ('last' per user, 'pair'
-    per type-pair) so data and the applied_batch_id marker commit as a
-    single atomic swap — no torn state between two tables on a crash.
-    The emitted entropy snapshot recomputes UNCONDITIONALLY from state
-    through the SAME entropy_from_pairs projection the batch operator
-    uses (refreshed even on a replayed/skipped fold, so it's always
-    derived from committed state).
+    per type-pair) so they commit as a single atomic swap — no torn
+    state between two tables on a crash. The entropy snapshot derives
+    from committed state through the SAME entropy_from_pairs projection
+    the batch operator uses.
 
     100 TB shape: per batch one window over batch∪|users| carried rows,
     one |types|²-bounded delta agg, one merge against the |users| +
     |types|² state — history is never re-read."""
-    import os
-
     from jira_cdc_git_spark.operators.timeseries import entropy_from_pairs
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
 
-    state_dir = f"{out_root}/entropy_state"
-    snap_dir = f"{out_root}/entropy"
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(events_dir)
-
-    state_schema = (
-        "kind string, user_id long, last_type string, ts timestamp,"
-        " event_id long, from_type string, to_type string, n long"
-    )
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(batch_df: DataFrame, batch_id: int, carried: DataFrame):
         batch = batch_df.select(
             "user_id", "event_type", "ts", "event_id"
         ).localCheckpoint()
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing, or the twin silently
-        # reinitializes from empty state (r9 advice)
-        _recover_dir(state_dir)
-        _recover_dir(snap_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            state = state.drop("applied_batch_id")
-        else:
-            state = spark.createDataFrame([], state_schema)
-            last_applied = None
-        if last_applied is None or batch_id > last_applied:
-            carry_last = state.filter(F.col("kind") == "last").select(
-                "user_id",
-                F.col("last_type").alias("event_type"),
-                "ts",
-                "event_id",
-            )
-            carry_pairs = state.filter(F.col("kind") == "pair").select(
-                "from_type", "to_type", "n"
-            )
-            seq = carry_last.unionByName(batch)
-            w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-            delta = (
-                seq.withColumn("next_type", F.lead("event_type").over(w))
-                .filter(F.col("next_type").isNotNull())
-                .groupBy(
-                    F.col("event_type").alias("from_type"),
-                    F.col("next_type").alias("to_type"),
-                )
-                .agg(F.count("*").cast("long").alias("n"))
-            )
-            new_pairs = (
-                carry_pairs.unionByName(delta)
-                .groupBy("from_type", "to_type")
-                .agg(F.sum("n").alias("n"))
-            )
-            lw = Window.partitionBy("user_id").orderBy(
-                F.desc("ts"), F.desc("event_id")
-            )
-            new_last = (
-                seq.withColumn("rn", F.row_number().over(lw))
-                .filter(F.col("rn") == 1)
-                .select("user_id", "event_type", "ts", "event_id")
-            )
-            new_state = (
-                new_last.select(
-                    F.lit("last").alias("kind"),
-                    "user_id",
-                    F.col("event_type").alias("last_type"),
-                    "ts",
-                    "event_id",
-                    F.lit(None).cast("string").alias("from_type"),
-                    F.lit(None).cast("string").alias("to_type"),
-                    F.lit(None).cast("long").alias("n"),
-                )
-                .unionByName(
-                    new_pairs.select(
-                        F.lit("pair").alias("kind"),
-                        F.lit(None).cast("long").alias("user_id"),
-                        F.lit(None).cast("string").alias("last_type"),
-                        F.lit(None).cast("timestamp").alias("ts"),
-                        F.lit(None).cast("long").alias("event_id"),
-                        "from_type",
-                        "to_type",
-                        "n",
-                    )
-                )
-                .withColumn("applied_batch_id", F.lit(batch_id))
-            )
-            _swap_dir_atomic(new_state.localCheckpoint(), state_dir)
-        # snapshot ALWAYS derives from committed state (idempotent on
-        # replays — same state in, same snapshot out)
-        committed = spark.read.parquet(state_dir)
-        pairs_now = committed.filter(F.col("kind") == "pair").select(
+        carry_last = carried.filter(F.col("kind") == "last").select(
+            "user_id",
+            F.col("last_type").alias("event_type"),
+            "ts",
+            "event_id",
+        )
+        carry_pairs = carried.filter(F.col("kind") == "pair").select(
             "from_type", "to_type", "n"
         )
-        _swap_dir_atomic(
-            entropy_from_pairs(pairs_now).localCheckpoint(), snap_dir
+        seq = carry_last.unionByName(batch)
+        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        delta = (
+            seq.withColumn("next_type", F.lead("event_type").over(w))
+            .filter(F.col("next_type").isNotNull())
+            .groupBy(
+                F.col("event_type").alias("from_type"),
+                F.col("next_type").alias("to_type"),
+            )
+            .agg(F.count("*").cast("long").alias("n"))
+        )
+        new_pairs = (
+            carry_pairs.unionByName(delta)
+            .groupBy("from_type", "to_type")
+            .agg(F.sum("n").alias("n"))
+        )
+        lw = Window.partitionBy("user_id").orderBy(
+            F.desc("ts"), F.desc("event_id")
+        )
+        new_last = (
+            seq.withColumn("rn", F.row_number().over(lw))
+            .filter(F.col("rn") == 1)
+            .select("user_id", "event_type", "ts", "event_id")
+        )
+        return new_last.select(
+            F.lit("last").alias("kind"),
+            "user_id",
+            F.col("event_type").alias("last_type"),
+            "ts",
+            "event_id",
+            F.lit(None).cast("string").alias("from_type"),
+            F.lit(None).cast("string").alias("to_type"),
+            F.lit(None).cast("long").alias("n"),
+        ).unionByName(
+            new_pairs.select(
+                F.lit("pair").alias("kind"),
+                F.lit(None).cast("long").alias("user_id"),
+                F.lit(None).cast("string").alias("last_type"),
+                F.lit(None).cast("timestamp").alias("ts"),
+                F.lit(None).cast("long").alias("event_id"),
+                "from_type",
+                "to_type",
+                "n",
+            )
         )
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir, snap_dir):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    def _entropy(committed: DataFrame) -> DataFrame:
+        return entropy_from_pairs(
+            committed.filter(F.col("kind") == "pair").select(
+                "from_type", "to_type", "n"
+            )
+        )
+
+    _drain_stateful(
+        spark,
+        events_dir,
+        schema,
+        checkpoint_dir,
+        states={
+            f"{out_root}/entropy_state": (
+                "kind string, user_id long, last_type string, ts timestamp,"
+                " event_id long, from_type string, to_type string, n long"
+            )
+        },
+        fold=_fold,
+        snapshots={f"{out_root}/entropy": _entropy},
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -1895,11 +1785,10 @@ def streaming_autocorrelation(
     the FIFTH genuinely stateful twin (r8 verdict task 8), following the
     streaming_transition_entropy IVM pattern: the per-(event_type, hour)
     count series is the carried state (abelian partials — a batch folds
-    in with one merge-sum, history is never re-read), committed together
-    with the applied_batch_id marker as a single atomic swap; the ACF
-    snapshot recomputes UNCONDITIONALLY from committed state through the
-    SAME acf_from_hourly projection the batch operator uses, so stream
-    and batch agree by construction.
+    in with one merge-sum, history is never re-read); the ACF snapshot
+    derives from committed state through the SAME acf_from_hourly
+    projection the batch operator uses, so stream and batch agree by
+    construction.
 
     Because hourly counts are pure abelian sums, batch parity holds for
     ANY chunking — mid-hour cuts, out-of-order arrival, and LATE rows
@@ -1911,70 +1800,30 @@ def streaming_autocorrelation(
     100 TB shape: per batch one |types|×|hours-in-batch| delta agg + one
     merge against the |types|×|hours| state table; the ACF projection
     runs over the bounded series, never the raw events."""
-    import os
-
     from jira_cdc_git_spark.operators.timeseries import acf_from_hourly
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
 
-    state_dir = f"{out_root}/acf_state"
-    snap_dir = f"{out_root}/acf"
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(events_dir)
-
-    state_schema = "event_type string, hour_ts timestamp, n long"
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select("event_type", "ts").localCheckpoint()
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing, or the twin silently
-        # reinitializes from empty state (r9 advice)
-        _recover_dir(state_dir)
-        _recover_dir(snap_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            state = state.drop("applied_batch_id")
-        else:
-            state = spark.createDataFrame([], state_schema)
-            last_applied = None
-        if last_applied is None or batch_id > last_applied:
-            delta = batch.groupBy(
-                "event_type",
-                F.date_trunc("hour", F.col("ts")).alias("hour_ts"),
-            ).agg(F.count("*").cast("long").alias("n"))
-            new_state = (
-                state.unionByName(delta)
-                .groupBy("event_type", "hour_ts")
-                .agg(F.sum("n").cast("long").alias("n"))
-                .withColumn("applied_batch_id", F.lit(batch_id))
-            )
-            _swap_dir_atomic(new_state.localCheckpoint(), state_dir)
-        # snapshot ALWAYS derives from committed state (idempotent on
-        # replays — same state in, same snapshot out)
-        committed = spark.read.parquet(state_dir).select(
-            "event_type", "hour_ts", "n"
-        )
-        _swap_dir_atomic(
-            acf_from_hourly(committed).localCheckpoint(), snap_dir
+    def _fold(batch_df: DataFrame, batch_id: int, series: DataFrame):
+        delta = batch_df.groupBy(
+            "event_type",
+            F.date_trunc("hour", F.col("ts")).alias("hour_ts"),
+        ).agg(F.count("*").cast("long").alias("n"))
+        return (
+            series.unionByName(delta)
+            .groupBy("event_type", "hour_ts")
+            .agg(F.sum("n").cast("long").alias("n"))
         )
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir, snap_dir):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_stateful(
+        spark,
+        events_dir,
+        schema,
+        checkpoint_dir,
+        states={
+            f"{out_root}/acf_state": "event_type string, hour_ts timestamp, n long"
+        },
+        fold=_fold,
+        snapshots={f"{out_root}/acf": acf_from_hourly},
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -1991,83 +1840,43 @@ def streaming_benford(
     state: per-leading-digit counts are pure abelian sums, so a batch
     folds in with one 9-row merge and parity holds for ANY chunking,
     ordering, or lateness (no per-key carry, no unit finalization). The
-    state table (digit, n) commits together with the applied_batch_id
-    marker in a single atomic swap; the report snapshot recomputes
-    UNCONDITIONALLY from committed state through the batch operator's
-    own benford_from_digit_counts projection, so the streaming audit
-    equals the batch audit by construction. The continuous-ingest form
-    of the fraud monitor: the chi-square statistic updates as orders
-    arrive, without ever rescanning history.
+    report snapshot derives from the committed (digit, n) state through
+    the batch operator's own benford_from_digit_counts projection, so
+    the streaming audit equals the batch audit by construction. The
+    continuous-ingest form of the fraud monitor: the chi-square
+    statistic updates as orders arrive, without ever rescanning history.
 
     100 TB shape: per batch one 9-group partial agg over the batch and
     one 9-row state merge — state is O(9) forever."""
-    import os
-
     from jira_cdc_git_spark.operators.relational import (
         benford_from_digit_counts,
     )
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
 
-    state_dir = f"{out_root}/benford_state"
-    snap_dir = f"{out_root}/benford"
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(orders_dir)
-
-    state_schema = "digit int, n long"
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select("o_totalprice").localCheckpoint()
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing, or the twin silently
-        # reinitializes from empty state (r9 advice)
-        _recover_dir(state_dir)
-        _recover_dir(snap_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            state = state.drop("applied_batch_id")
-        else:
-            state = spark.createDataFrame([], state_schema)
-            last_applied = None
-        if last_applied is None or batch_id > last_applied:
-            digit = F.substring(
-                F.floor("o_totalprice").cast("long").cast("string"), 1, 1
-            ).cast("int")
-            delta = (
-                batch.filter(F.col("o_totalprice") >= 1.0)
-                .select(digit.alias("digit"))
-                .groupBy("digit")
-                .agg(F.count("*").cast("long").alias("n"))
-            )
-            new_state = (
-                state.unionByName(delta)
-                .groupBy("digit")
-                .agg(F.sum("n").cast("long").alias("n"))
-                .withColumn("applied_batch_id", F.lit(batch_id))
-            )
-            _swap_dir_atomic(new_state.localCheckpoint(), state_dir)
-        committed = spark.read.parquet(state_dir).select("digit", "n")
-        _swap_dir_atomic(
-            benford_from_digit_counts(committed).localCheckpoint(), snap_dir
+    def _fold(batch_df: DataFrame, batch_id: int, counts: DataFrame):
+        digit = F.substring(
+            F.floor("o_totalprice").cast("long").cast("string"), 1, 1
+        ).cast("int")
+        delta = (
+            batch_df.filter(F.col("o_totalprice") >= 1.0)
+            .select(digit.alias("digit"))
+            .groupBy("digit")
+            .agg(F.count("*").cast("long").alias("n"))
+        )
+        return (
+            counts.unionByName(delta)
+            .groupBy("digit")
+            .agg(F.sum("n").cast("long").alias("n"))
         )
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir, snap_dir):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_stateful(
+        spark,
+        orders_dir,
+        schema,
+        checkpoint_dir,
+        states={f"{out_root}/benford_state": "digit int, n long"},
+        fold=_fold,
+        snapshots={f"{out_root}/benford": benford_from_digit_counts},
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -2086,99 +1895,55 @@ def streaming_gap_fill_locf(
     batch folds in with one merge and parity holds for ANY chunking —
     mid-hour cuts, out-of-order arrival, and late rows all resolve to
     the same per-hour winner a batch re-run would pick. The dense
-    filled-grid snapshot recomputes UNCONDITIONALLY from committed
-    state through the batch operator's own locf_from_hourly projection
-    (lead + explode — the r9 observation-shuffle shape), committed
-    together with the applied_batch_id marker in one atomic swap.
+    filled-grid snapshot derives from committed state through the batch
+    operator's own locf_from_hourly projection (lead + explode — the r9
+    observation-shuffle shape).
 
     100 TB shape: per batch one (user, hour) struct-max delta agg + one
     merge against observation-sized state; the dense grid exists only
     inside the snapshot's final projection, exactly as in batch."""
-    import os
-
     from jira_cdc_git_spark.operators.timeseries import locf_from_hourly
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
 
-    state_dir = f"{out_root}/locf_state"
-    snap_dir = f"{out_root}/locf"
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(events_dir)
-
-    state_schema = (
-        "user_id long, hour_ts timestamp, ts timestamp, "
-        "event_id long, value double"
-    )
-    pick = F.max(
-        F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    ).alias("w")
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select(
-            "user_id", "ts", "event_id", "value"
-        ).localCheckpoint()
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing, or the twin silently
-        # reinitializes from empty state (r9 advice)
-        _recover_dir(state_dir)
-        _recover_dir(snap_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            state = state.drop("applied_batch_id")
-        else:
-            state = spark.createDataFrame([], state_schema)
-            last_applied = None
-        if last_applied is None or batch_id > last_applied:
-            delta = (
-                batch.withColumn(
-                    "hour_ts", F.date_trunc("hour", F.col("ts"))
-                )
-                .groupBy("user_id", "hour_ts")
-                .agg(pick)
-                .select(
-                    "user_id", "hour_ts",
-                    F.col("w.ts").alias("ts"),
-                    F.col("w.event_id").alias("event_id"),
-                    F.col("w.value").alias("value"),
-                )
-            )
-            new_state = (
-                state.unionByName(delta)
-                .groupBy("user_id", "hour_ts")
-                .agg(pick)
-                .select(
-                    "user_id", "hour_ts",
-                    F.col("w.ts").alias("ts"),
-                    F.col("w.event_id").alias("event_id"),
-                    F.col("w.value").alias("value"),
-                )
-                .withColumn("applied_batch_id", F.lit(batch_id))
-            )
-            _swap_dir_atomic(new_state.localCheckpoint(), state_dir)
-        committed = spark.read.parquet(state_dir).select(
-            "user_id", "hour_ts", F.col("value").alias("obs_value")
-        )
-        _swap_dir_atomic(
-            locf_from_hourly(committed).localCheckpoint(), snap_dir
+    def _last_obs(df: DataFrame) -> DataFrame:
+        return (
+            df.groupBy("user_id", "hour_ts")
+            .agg(F.max(F.struct("ts", "event_id", "value")).alias("w"))
+            .select("user_id", "hour_ts", "w.ts", "w.event_id", "w.value")
         )
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir, snap_dir):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    def _fold(batch_df: DataFrame, batch_id: int, obs: DataFrame):
+        delta = _last_obs(
+            batch_df.select(
+                "user_id",
+                F.date_trunc("hour", F.col("ts")).alias("hour_ts"),
+                "ts",
+                "event_id",
+                "value",
+            )
+        )
+        return _last_obs(obs.unionByName(delta))
+
+    def _grid(committed: DataFrame) -> DataFrame:
+        return locf_from_hourly(
+            committed.select(
+                "user_id", "hour_ts", F.col("value").alias("obs_value")
+            )
+        )
+
+    _drain_stateful(
+        spark,
+        events_dir,
+        schema,
+        checkpoint_dir,
+        states={
+            f"{out_root}/locf_state": (
+                "user_id long, hour_ts timestamp, ts timestamp, "
+                "event_id long, value double"
+            )
+        },
+        fold=_fold,
+        snapshots={f"{out_root}/locf": _grid},
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -2200,32 +1965,16 @@ def streaming_hill_tail(
     holds for ANY chunking, ordering, or lateness: a late monster doc
     simply re-enters the top set exactly as a batch re-run would place
     it. State is O(|langs|·(k+1)) forever — the smallest per-key state
-    of any twin. The snapshot recomputes UNCONDITIONALLY from committed
-    state through the batch operator's own estimate projection
-    (hill_from_top — nano-rounded log terms), so stream == batch by
-    construction.
+    of any twin. The snapshot derives from committed state through the
+    batch operator's own estimate projection (hill_from_top —
+    nano-rounded log terms), so stream == batch by construction.
 
     100 TB shape: per batch one per-lang top-(k+1) selection over the
     BATCH only (TakeOrderedAndProject-scale), one merge window over the
     bounded state frame; history is never re-read."""
-    import os
-
     from jira_cdc_git_spark.operators.text import HILL_K, hill_from_top
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
-
-    state_dir = f"{out_root}/hill_state"
-    snap_dir = f"{out_root}/hill"
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(docs_dir)
-
-    state_schema = "lang string, n_chars long, doc_id long"
 
     def _top(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
         w = Window.partitionBy("lang").orderBy(
             F.col("n_chars").desc(), F.col("doc_id")
         )
@@ -2235,47 +1984,20 @@ def streaming_hill_tail(
             .select("lang", "n_chars", "doc_id")
         )
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select("lang", "n_chars", "doc_id").localCheckpoint()
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing (r9 advice discipline)
-        _recover_dir(state_dir)
-        _recover_dir(snap_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            state = state.drop("applied_batch_id")
-        else:
-            state = spark.createDataFrame([], state_schema)
-            last_applied = None
-        if last_applied is None or batch_id > last_applied:
-            merged = _top(
-                state.unionByName(_top(batch)).dropDuplicates(
-                    ["lang", "doc_id"]
-                )
-            ).withColumn("applied_batch_id", F.lit(batch_id))
-            _swap_dir_atomic(merged.localCheckpoint(), state_dir)
-        committed = spark.read.parquet(state_dir).select(
-            "lang", "n_chars", "doc_id"
-        )
-        _swap_dir_atomic(
-            hill_from_top(committed).localCheckpoint(), snap_dir
+    def _fold(batch_df: DataFrame, batch_id: int, top: DataFrame):
+        return _top(
+            top.unionByName(_top(batch_df)).dropDuplicates(["lang", "doc_id"])
         )
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir, snap_dir):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_stateful(
+        spark,
+        docs_dir,
+        schema,
+        checkpoint_dir,
+        states={f"{out_root}/hill_state": "lang string, n_chars long, doc_id long"},
+        fold=_fold,
+        snapshots={f"{out_root}/hill": hill_from_top},
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -2292,86 +2014,46 @@ def streaming_length_drift(
     (source, n_chars) count histogram, pure abelian sums (a batch folds
     in with one merge, parity holds for ANY chunking/ordering/lateness
     — the streaming_benford state shape, keyed two deep). The KS
-    snapshot recomputes UNCONDITIONALLY from committed state through
-    the batch operator's own drift_from_length_counts projection, so
-    the continuous drift monitor equals the batch audit by
-    construction: a feed that starts truncating documents mid-stream
-    moves its D statistic on the very next micro-batch.
+    snapshot derives from committed state through the batch operator's
+    own drift_from_length_counts projection, so the continuous drift
+    monitor equals the batch audit by construction: a feed that starts
+    truncating documents mid-stream moves its D statistic on the very
+    next micro-batch. The SAME committed histogram feeds the second
+    drift monitor: W1 is just another projection of the state, so the
+    continuous KS and earth-mover monitors can never disagree about the
+    data.
 
     100 TB shape: per batch one (source, length) delta agg over the
     batch, one merge against the value-domain-bounded state histogram
     (|sources| x |distinct lengths| — never doc-scale); the ECDF grid
     work lives entirely in the snapshot projection."""
-    import os
-
     from jira_cdc_git_spark.operators.text import (
         drift_from_length_counts,
         wasserstein_from_length_counts,
     )
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
 
-    state_dir = f"{out_root}/lendrift_state"
-    snap_dir = f"{out_root}/lendrift"
-    w1_dir = f"{out_root}/w1drift"
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(docs_dir)
-
-    state_schema = "source string, v long, c long"
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select("source", "n_chars").localCheckpoint()
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing (r9 advice discipline)
-        _recover_dir(state_dir)
-        _recover_dir(snap_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            state = state.drop("applied_batch_id")
-        else:
-            state = spark.createDataFrame([], state_schema)
-            last_applied = None
-        if last_applied is None or batch_id > last_applied:
-            delta = batch.groupBy(
-                "source", F.col("n_chars").alias("v")
-            ).agg(F.count("*").cast("long").alias("c"))
-            new_state = (
-                state.unionByName(delta)
-                .groupBy("source", "v")
-                .agg(F.sum("c").cast("long").alias("c"))
-                .withColumn("applied_batch_id", F.lit(batch_id))
-            )
-            _swap_dir_atomic(new_state.localCheckpoint(), state_dir)
-        committed = spark.read.parquet(state_dir).select("source", "v", "c")
-        _swap_dir_atomic(
-            drift_from_length_counts(committed).localCheckpoint(), snap_dir
-        )
-        # the SAME committed histogram feeds the second drift monitor:
-        # W1 is just another projection of the state, so the continuous
-        # KS and earth-mover monitors can never disagree about the data
-        _recover_dir(w1_dir)
-        _swap_dir_atomic(
-            wasserstein_from_length_counts(committed).localCheckpoint(),
-            w1_dir,
+    def _fold(batch_df: DataFrame, batch_id: int, hist: DataFrame):
+        delta = batch_df.groupBy(
+            "source", F.col("n_chars").alias("v")
+        ).agg(F.count("*").cast("long").alias("c"))
+        return (
+            hist.unionByName(delta)
+            .groupBy("source", "v")
+            .agg(F.sum("c").cast("long").alias("c"))
         )
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir, snap_dir, w1_dir):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_stateful(
+        spark,
+        docs_dir,
+        schema,
+        checkpoint_dir,
+        states={f"{out_root}/lendrift_state": "source string, v long, c long"},
+        fold=_fold,
+        snapshots={
+            f"{out_root}/lendrift": drift_from_length_counts,
+            f"{out_root}/w1drift": wasserstein_from_length_counts,
+        },
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -2389,70 +2071,29 @@ def streaming_association_rules(
     abelian and idempotent, so a batch folds in with one
     union-and-distinct and parity holds for ANY chunking, ordering,
     lateness, or replay (a duplicate delivery adds nothing by
-    definition of a set). The support/confidence/lift snapshot
-    recomputes UNCONDITIONALLY from committed state through the batch
-    operator's own rules_from_baskets projection.
+    definition of a set). The support/confidence/lift snapshot derives
+    from committed state through the batch operator's own
+    rules_from_baskets projection.
 
     100 TB shape: per batch one distinct over the batch, one merge
     against basket-bounded state (|users|·|types| worst case — the
     basket table, never the event log); the pair fan-out lives in the
     snapshot projection with per-user |types|²-bounded fanout."""
-    import os
-
     from jira_cdc_git_spark.operators.timeseries import rules_from_baskets
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
 
-    state_dir = f"{out_root}/rules_state"
-    snap_dir = f"{out_root}/rules"
+    def _fold(batch_df: DataFrame, batch_id: int, baskets: DataFrame):
+        batch = batch_df.select("user_id", "event_type").distinct()
+        return baskets.unionByName(batch).distinct()
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(events_dir)
-
-    state_schema = "user_id long, event_type string"
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select("user_id", "event_type").localCheckpoint()
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing (r9 advice discipline)
-        _recover_dir(state_dir)
-        _recover_dir(snap_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            state = state.drop("applied_batch_id")
-        else:
-            state = spark.createDataFrame([], state_schema)
-            last_applied = None
-        if last_applied is None or batch_id > last_applied:
-            new_state = (
-                state.unionByName(batch.distinct())
-                .distinct()
-                .withColumn("applied_batch_id", F.lit(batch_id))
-            )
-            _swap_dir_atomic(new_state.localCheckpoint(), state_dir)
-        committed = spark.read.parquet(state_dir).select(
-            "user_id", "event_type"
-        )
-        _swap_dir_atomic(
-            rules_from_baskets(committed).localCheckpoint(), snap_dir
-        )
-
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir, snap_dir):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_stateful(
+        spark,
+        events_dir,
+        schema,
+        checkpoint_dir,
+        states={f"{out_root}/rules_state": "user_id long, event_type string"},
+        fold=_fold,
+        snapshots={f"{out_root}/rules": rules_from_baskets},
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -2472,85 +2113,45 @@ def streaming_spearman(
     so an order whose line items are split across ANY chunk boundary —
     mid-order cuts, out-of-order arrival, late lines for orders that
     already emitted — folds to the same totals a batch re-run would
-    compute. The correlation snapshot recomputes UNCONDITIONALLY from
-    committed state joined against the static orders dimension, through
-    the batch operator's own spearman_from_pairs projection (whose
-    value-HISTOGRAM rank path is exactly what makes this twin cheap:
-    ranks derive from the count state, never from re-sorted history),
-    committed together with the applied_batch_id marker in one atomic
-    swap.
+    compute. The correlation snapshot derives from committed state
+    joined against the static orders dimension, through the batch
+    operator's own spearman_from_pairs projection (whose value-HISTOGRAM
+    rank path is exactly what makes this twin cheap: ranks derive from
+    the count state, never from re-sorted history).
 
     100 TB shape: per batch one orderkey-group delta agg + one merge
     against |orders|-bounded state; the snapshot's rank windows run
     over |distinct values|, never rows."""
-    import os
-
     from jira_cdc_git_spark.operators.relational import spearman_from_pairs
     from jira_cdc_git_spark.sources.registry import load_table
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
 
-    state_dir = f"{out_root}/spearman_state"
-    snap_dir = f"{out_root}/spearman"
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(lineitem_dir)
-
-    state_schema = "l_orderkey long, n_items long"
     cents_by_order = load_table(spark, "orders", orders_sf_dir).select(
         F.col("o_orderkey").alias("l_orderkey"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
 
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select("l_orderkey").localCheckpoint()
-        # crash between _swap_dir_atomic's two renames leaves only
-        # .bak — restore it BEFORE probing (r9 advice discipline)
-        _recover_dir(state_dir)
-        _recover_dir(snap_dir)
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last_applied = state.agg(F.max("applied_batch_id")).first()[0]
-            state = state.drop("applied_batch_id")
-        else:
-            state = spark.createDataFrame([], state_schema)
-            last_applied = None
-        if last_applied is None or batch_id > last_applied:
-            delta = batch.groupBy("l_orderkey").agg(
-                F.count("*").cast("long").alias("n_items")
-            )
-            new_state = (
-                state.unionByName(delta)
-                .groupBy("l_orderkey")
-                .agg(F.sum("n_items").cast("long").alias("n_items"))
-                .withColumn("applied_batch_id", F.lit(batch_id))
-            )
-            _swap_dir_atomic(new_state.localCheckpoint(), state_dir)
-        committed = spark.read.parquet(state_dir).select(
-            "l_orderkey", "n_items"
+    def _fold(batch_df: DataFrame, batch_id: int, items: DataFrame):
+        delta = batch_df.groupBy("l_orderkey").agg(
+            F.count("*").cast("long").alias("n_items")
         )
-        _swap_dir_atomic(
-            spearman_from_pairs(
-                committed.join(cents_by_order, "l_orderkey")
-            ).localCheckpoint(),
-            snap_dir,
+        return (
+            items.unionByName(delta)
+            .groupBy("l_orderkey")
+            .agg(F.sum("n_items").cast("long").alias("n_items"))
         )
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (state_dir, snap_dir):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    def _corr(committed: DataFrame) -> DataFrame:
+        return spearman_from_pairs(committed.join(cents_by_order, "l_orderkey"))
+
+    _drain_stateful(
+        spark,
+        lineitem_dir,
+        schema,
+        checkpoint_dir,
+        states={f"{out_root}/spearman_state": "l_orderkey long, n_items long"},
+        fold=_fold,
+        snapshots={f"{out_root}/spearman": _corr},
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -2571,108 +2172,71 @@ def streaming_bm25_topk(
     1-row corpus totals (n_docs, total_dl) that define idf and avgdl.
     Both are pure abelian sums, so any chunking or arrival order folds
     to the same index a batch build would produce. Each state dir
-    commits with its own applied_batch_id marker (a crash between the
-    two swaps re-folds the batch ONLY into the dir that missed it —
-    the per-dir guard heals the tear). The ranking snapshot recomputes
-    UNCONDITIONALLY from committed state through the batch operator's
-    own bm25_score_topk projection, so stream and batch rankings agree
-    by construction — scores included, since avgdl derives from the
-    same exact integer sums.
+    commits on its own (a crash between the two swaps re-folds the
+    batch ONLY into the dir that missed it). The ranking snapshot
+    derives from committed state through the batch operator's own
+    bm25_score_topk projection, so stream and batch rankings agree by
+    construction — scores included, since avgdl derives from the same
+    exact integer sums.
 
     100 TB shape: per batch one query-term-filtered posting agg (the
     explode filters to |query| terms BEFORE any shuffle) + one merge
     against match-bounded state; the snapshot rides the posting-scoped
     scorer, never the corpus."""
-    import os
-
     from jira_cdc_git_spark.functions import text as TXF
     from jira_cdc_git_spark.operators.text import BM25_QUERY, bm25_score_topk
-    from jira_cdc_git_spark.state import _recover_dir, _swap_dir_atomic
 
     query = query or BM25_QUERY
     terms = sorted(set(query.split()))
-    post_dir = f"{out_root}/bm25_postings"
-    len_dir = f"{out_root}/bm25_totals"
-    snap_dir = f"{out_root}/bm25"
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.parquet(documents_dir)
-
-    post_schema = "doc_id long, dl long, tok string, tf long"
-    len_schema = "n_docs long, total_dl long"
-
-    def _load(path: str, schema_str: str):
-        _recover_dir(path)
-        if os.path.isdir(path):
-            state = spark.read.parquet(path)
-            last = state.agg(F.max("applied_batch_id")).first()[0]
-            return state.drop("applied_batch_id"), last
-        return spark.createDataFrame([], schema_str), None
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _fold(
+        batch_df: DataFrame, batch_id: int, postings: DataFrame, totals: DataFrame
+    ):
         batch = batch_df.select(
             "doc_id", TXF.tokens(F.col("text")).alias("toks")
         ).localCheckpoint()
-        _recover_dir(snap_dir)
-        post_state, post_last = _load(post_dir, post_schema)
-        len_state, len_last = _load(len_dir, len_schema)
-        if post_last is None or batch_id > post_last:
-            delta = (
-                batch.select(
-                    "doc_id",
-                    F.size("toks").cast("long").alias("dl"),
-                    F.explode("toks").alias("tok"),
-                )
-                .filter(F.col("tok").isin(terms))
-                .groupBy("doc_id", "dl", "tok")
-                .agg(F.count("*").cast("long").alias("tf"))
+        delta = (
+            batch.select(
+                "doc_id",
+                F.size("toks").cast("long").alias("dl"),
+                F.explode("toks").alias("tok"),
             )
-            new_post = (
-                post_state.unionByName(delta)
-                .groupBy("doc_id", "dl", "tok")
-                .agg(F.sum("tf").cast("long").alias("tf"))
-                .withColumn("applied_batch_id", F.lit(batch_id))
-            )
-            _swap_dir_atomic(new_post.localCheckpoint(), post_dir)
-        if len_last is None or batch_id > len_last:
-            delta_len = batch.agg(
-                F.count("*").cast("long").alias("n_docs"),
-                F.sum(F.size("toks")).cast("long").alias("total_dl"),
-            )
-            new_len = (
-                len_state.unionByName(delta_len)
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("total_dl").cast("long").alias("total_dl"),
-                )
-                .withColumn("applied_batch_id", F.lit(batch_id))
-            )
-            _swap_dir_atomic(new_len.localCheckpoint(), len_dir)
-        postings = spark.read.parquet(post_dir).select(
-            "doc_id", "dl", "tok", "tf"
+            .filter(F.col("tok").isin(terms))
+            .groupBy("doc_id", "dl", "tok")
+            .agg(F.count("*").cast("long").alias("tf"))
         )
-        stats = spark.read.parquet(len_dir).select(
+        new_postings = (
+            postings.unionByName(delta)
+            .groupBy("doc_id", "dl", "tok")
+            .agg(F.sum("tf").cast("long").alias("tf"))
+        )
+        delta_totals = batch.agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.sum(F.size("toks")).cast("long").alias("total_dl"),
+        )
+        new_totals = totals.unionByName(delta_totals).agg(
+            F.sum("n_docs").cast("long").alias("n_docs"),
+            F.sum("total_dl").cast("long").alias("total_dl"),
+        )
+        return new_postings, new_totals
+
+    def _ranking(postings: DataFrame, totals: DataFrame) -> DataFrame:
+        stats = totals.select(
             F.col("n_docs").cast("double").alias("n_docs"),
             (F.col("total_dl") / F.col("n_docs")).alias("avgdl"),
         )
-        _swap_dir_atomic(
-            bm25_score_topk(postings, stats, k).localCheckpoint(), snap_dir
-        )
+        return bm25_score_topk(postings, stats, k)
 
-    # heal a torn final swap BEFORE waiting for data: a crash
-    # between _swap_dir_atomic's two renames leaves only .bak,
-    # and under availableNow no recovery would run until the
-    # next nonempty batch arrives (r11 advice)
-    for _d in (post_dir, len_dir, snap_dir):
-        _recover_dir(_d)
-    (
-        feed.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_stateful(
+        spark,
+        documents_dir,
+        schema,
+        checkpoint_dir,
+        states={
+            f"{out_root}/bm25_postings": "doc_id long, dl long, tok string, tf long",
+            f"{out_root}/bm25_totals": "n_docs long, total_dl long",
+        },
+        fold=_fold,
+        snapshots={f"{out_root}/bm25": _ranking},
+        max_files_per_trigger=max_files_per_trigger,
     )

@@ -186,3 +186,36 @@ def test_symlink_tree_materializes(spark, sf_dir, tmp_path):
     assert os.path.islink(link)
     assert os.readlink(link) == f"../../issues/{some['dst_key']}.yaml"
     df.unpersist()
+
+
+def test_two_versions_of_one_key_commit_once_each(spark, fifty, tmp_path):
+    """Two distinct versions of one key in one batch are two changes: two
+    commits, oldest first, each carrying its OWN version's fields (subject
+    and YAML document) — not a key-only cross product of versions."""
+    from datetime import datetime
+
+    one = fifty.limit(1)
+    key, project = one.select("key", "project_key").first()
+    v1 = one.withColumn("updated", F.lit(datetime(2030, 1, 1))).withColumn(
+        "summary", F.lit("first version")
+    )
+    v2 = one.withColumn("updated", F.lit(datetime(2030, 6, 1))).withColumn(
+        "summary", F.lit("second version")
+    )
+    repo = str(tmp_path / "repo_versions")
+    assert sinks_git.materialize_fast_import(v2.unionByName(v1), repo) == 2
+    subjects = sinks_git.git_log_subjects(repo)
+    assert len(subjects) == 2
+    assert subjects[0].endswith(f"{key} - first version")
+    assert subjects[1].endswith(f"{key} - second version")
+    path = f"projects/{project}/issues/{key}.yaml"
+    for rev, summary, updated in (
+        ("HEAD~1", "first version", "2030-01-01"),
+        ("HEAD", "second version", "2030-06-01"),
+    ):
+        doc = subprocess.run(
+            ["git", "-C", repo, "show", f"{rev}:{path}"],
+            check=True, capture_output=True, text=True,
+        ).stdout
+        assert f"summary: {summary}" in doc
+        assert updated in doc

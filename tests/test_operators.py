@@ -170,20 +170,6 @@ def test_ivf_kmeans_recall_at_least_untrained(spark, sf_dir):
     assert all(-1.0 <= r["cos_sim"] <= 1.0 for r in rows)
 
 
-def test_kmeans_centroids_deterministic_and_complete(spark, sf_dir):
-    from jira_cdc_git_spark.sources.registry import load_table_spread
-
-    emb = load_table_spread(spark, "embeddings", sf_dir, "vec_id")
-    c1 = V.kmeans_centroids(emb, k=8, iters=2)
-    c2 = V.kmeans_centroids(emb, k=8, iters=2)
-    assert c1.count() == 8
-    r1 = {r["cent_id"]: r["cent_emb"] for r in c1.collect()}
-    r2 = {r["cent_id"]: r["cent_emb"] for r in c2.collect()}
-    assert r1.keys() == r2.keys()
-    for k_ in r1:
-        assert r1[k_] == r2[k_]
-
-
 def test_epic_discovery_dispatcher(spark, sf_dir):
     from jira_cdc_git_spark.operators import jira as J
 

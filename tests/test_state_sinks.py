@@ -266,3 +266,37 @@ def test_corpus_shard_sink_roundtrip(spark, sf_dir, tmp_path):
     # full union covers every document exactly once
     total = spark.read.parquet(path).count()
     assert total == len(assignment)
+
+
+def test_exact_redelivery_syncs_and_commits_once(store, spark, issues, tmp_path):
+    """At-least-once delivery can hand one poll the same CHANGED
+    issue-version twice. It is one change: one synced row, one
+    commit-log row and one git commit for that version."""
+    from jira_cdc_git_spark import sinks_git
+
+    out, repos = str(tmp_path / "out"), str(tmp_path / "repos")
+    one = issues.orderBy("key").limit(1).cache()
+    key, project = one.select("key", "project_key").first()
+    r1 = incremental_sync_batch(
+        spark, one, store, out, now=datetime(2030, 1, 1), git_repos_root=repos
+    )
+    assert r1["total"] == 1
+    changed = one.withColumn("updated", F.lit(datetime(2031, 1, 1)))
+    r2 = incremental_sync_batch(
+        spark,
+        changed.unionByName(changed),
+        store,
+        out,
+        now=datetime(2031, 1, 2),
+        git_repos_root=repos,
+    )
+    assert r2["total"] == 1 and r2["successful"] == 1
+    log = spark.read.parquet(f"{out}/commit_log").filter(
+        F.col("commit_ts") == datetime(2031, 1, 1)
+    )
+    assert log.count() == 1
+    import os
+
+    subjects = sinks_git.git_log_subjects(os.path.join(repos, project))
+    assert sum(key in s for s in subjects) == 2  # the first sync + this one
+    one.unpersist()

@@ -2281,3 +2281,141 @@ def test_streaming_bm25_torn_swap_recovers_state(spark, sf_dir, tmp_path):
         for r in bm25_topk(spark, sf_dir).collect()
     }
     assert got == want
+
+
+def _torn_swap(df, live):
+    """_swap_dir_atomic dying between its two renames: the new table is
+    written to .tmp and the live dir moved aside to .bak, but .tmp never
+    lands — only .bak holds committed data."""
+    import os
+
+    df.write.mode("overwrite").parquet(live + ".tmp")
+    if os.path.isdir(live):
+        os.replace(live, live + ".bak")
+    raise RuntimeError("injected crash between the swap's renames")
+
+
+@pytest.mark.parametrize(
+    "fault, at_call, torn_dir",
+    [
+        ("raise", 3, None),  # before batch 1's state swap
+        ("raise", 4, None),  # between batch 1's state and snapshot swaps
+        ("torn", 3, "benford_state"),  # torn state rename: only .bak left
+        ("torn", 4, "benford"),  # torn FINAL swap of the run
+    ],
+    ids=["before_state_swap", "state_then_crash", "torn_state", "torn_final"],
+)
+def test_stateful_harness_crash_at_every_write_boundary(
+    spark, sf_dir, tmp_path, monkeypatch, fault, at_call, torn_dir
+):
+    """Crash injection at each write boundary of the shared stateful
+    harness (two batches; swap calls per batch: state, then snapshot).
+    After a restart on the same checkpoint the state holds every row
+    exactly once (no double fold, marker at the last batch) and the
+    snapshot equals the batch operator. A torn final swap is also healed
+    before the next start when no new data arrives (no batch fires)."""
+    import os
+
+    import jira_cdc_git_spark.state as STATE
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from jira_cdc_git_spark.operators.relational import (
+        benford_deviation_report,
+    )
+    from jira_cdc_git_spark.sources.registry import load_table
+    from jira_cdc_git_spark.streaming.pipeline import streaming_benford
+
+    od = load_table(spark, "orders", sf_dir).orderBy("o_orderkey")
+    rows = od.collect()
+    c1 = len(rows) // 2
+    orders_dir = str(tmp_path / "feed")
+    for chunk in (rows[:c1], rows[c1:]):
+        spark.createDataFrame(chunk, od.schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(orders_dir)
+    out_root = str(tmp_path / "ben")
+    ckpt = str(tmp_path / "ckpt")
+    state_dir, snap_dir = f"{out_root}/benford_state", f"{out_root}/benford"
+
+    real_swap = STATE._swap_dir_atomic
+    calls = {"n": 0}
+
+    def faulty_swap(df, path):
+        calls["n"] += 1
+        if calls["n"] == at_call:
+            if fault == "torn":
+                _torn_swap(df, path)
+            raise RuntimeError("injected crash before the swap")
+        real_swap(df, path)
+
+    monkeypatch.setattr(STATE, "_swap_dir_atomic", faulty_swap)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        streaming_benford(spark, orders_dir, od.schema, ckpt, out_root)
+    if torn_dir is not None:
+        torn = f"{out_root}/{torn_dir}"
+        assert not os.path.isdir(torn) and os.path.isdir(torn + ".bak")
+
+    monkeypatch.setattr(STATE, "_swap_dir_atomic", real_swap)
+    streaming_benford(spark, orders_dir, od.schema, ckpt, out_root)
+
+    n_priced = od.filter(F.col("o_totalprice") >= 1.0).count()
+    want = {
+        r["digit"]: (r["n"], r["chi2_stat"])
+        for r in benford_deviation_report(spark, sf_dir).collect()
+    }
+
+    def check():
+        state = spark.read.parquet(state_dir)
+        assert state.agg(F.sum("n")).first()[0] == n_priced
+        assert state.agg(F.max("applied_batch_id")).first()[0] == 1
+        got = {
+            r["digit"]: (r["n"], r["chi2_stat"])
+            for r in spark.read.parquet(snap_dir).collect()
+        }
+        assert got == want
+
+    check()
+    if torn_dir == "benford":
+        # the same tear after a completed run, restarted with no new data
+        os.replace(snap_dir, snap_dir + ".bak")
+        streaming_benford(spark, orders_dir, od.schema, ckpt, out_root)
+        check()
+
+
+def test_streaming_ivm_counts_torn_final_swap_heals(spark, sf_dir, tmp_path):
+    """The counts table IS the twin's output: a torn final swap leaves
+    only counts.bak, and a restart with no new data (no batch fires)
+    must restore it before the stream starts — the counts then still
+    equal a full recompute, folded exactly once."""
+    import os
+
+    from jira_cdc_git_spark.streaming.pipeline import streaming_ivm_counts
+
+    iss = FX.issues(spark, sf_dir).select(
+        "key", "project_key", "status", "issuetype"
+    )
+    feed_dir = str(tmp_path / "feed")
+    for i in range(2):
+        iss.filter(F.crc32(F.col("key")) % 2 == i).write.mode("append").parquet(
+            feed_dir
+        )
+    counts_dir = str(tmp_path / "counts")
+    ckpt = str(tmp_path / "ckpt")
+    streaming_ivm_counts(spark, feed_dir, iss.schema, ckpt, counts_dir)
+    os.replace(counts_dir, counts_dir + ".bak")
+
+    streaming_ivm_counts(spark, feed_dir, iss.schema, ckpt, counts_dir)
+    assert os.path.isdir(counts_dir), "pre-start recovery must restore .bak"
+    got = {
+        (r["project_key"], r["status_name"]): r["n_issues"]
+        for r in spark.read.parquet(counts_dir).collect()
+    }
+    want = {
+        (r["project_key"], r["status_name"]): r["n"]
+        for r in iss.groupBy(
+            "project_key", F.col("status.name").alias("status_name")
+        )
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert got == want
