@@ -22,6 +22,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+PACKAGE_PARENT = os.path.dirname(PACKAGE_DIR)
+PACKAGE_ZIP = "jira_cdc_git_spark.zip"
 
 
 def _default_driver_mem(cap_gb: int = 24, frac: float = 0.6) -> str:
@@ -36,6 +39,32 @@ def _default_driver_mem(cap_gb: int = 24, frac: float = 0.6) -> str:
     except OSError:
         pass
     return f"{cap_gb}g"
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Python workers unpickle functions that live in this package (the
+    git fan-out writer, Python UDFs), so they must import it whatever the
+    driver's cwd and PYTHONPATH: ship the package's sources as a zip with
+    ``addPyFile``, once per context. The zip's directory is removed when
+    the process exits."""
+    import atexit
+    import shutil
+    import tempfile
+    import zipfile
+
+    sc = spark.sparkContext
+    if PACKAGE_ZIP in sc._python_includes:
+        return
+    tmp = tempfile.mkdtemp(prefix="jira_cdc_git_spark-")
+    atexit.register(shutil.rmtree, tmp, True)
+    path = os.path.join(tmp, PACKAGE_ZIP)
+    with zipfile.ZipFile(path, "w") as z:
+        for dirpath, _dirs, files in os.walk(PACKAGE_DIR):
+            for name in files:
+                if name.endswith(".py"):
+                    full = os.path.join(dirpath, name)
+                    z.write(full, os.path.relpath(full, PACKAGE_PARENT))
+    sc.addPyFile(path)
 
 
 def get_spark(
@@ -86,4 +115,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark)
     return spark

@@ -14,10 +14,15 @@ Three writers over the same commit_log frame (sinks.commit_log_rows):
   when the corpus spans many projects.
 * ``materialize_fan_out`` — the scale path and the reference's actual
   layout (one repo PER PROJECT, README.md:53-73): partition the commit
-  frame by project and run one ``git fast-import`` per project repo inside
-  executors via ``foreachPartition``. Driver-side cost is one small
-  aggregate; materialization throughput scales with the number of
-  projects × executors, and re-runs append (branch-tip graft).
+  frame — and, when ``edges`` are given, the relationship symlink rows —
+  by project and run ONE ``git fast-import`` plus ONE checkout per project
+  repo inside executors. The stream carries the project's issue commits,
+  then its symlink-tree commit; the per-project counts come back from the
+  write job itself. Materialization throughput scales with the number of
+  projects × executors. Later batches append (branch-tip graft), and a
+  replayed batch adds nothing: versions the branch already holds are not
+  committed again. ``materialize_symlinks_fan_out`` is the links-only call
+  of the same writer.
 * ``materialize_porcelain`` — reference-parity loop: ``git add`` +
   ``git commit`` per issue (git.go:253-287 stages then commits each file).
   Kept for fidelity and for repos with hooks that must fire; O(n)
@@ -80,48 +85,116 @@ def _yaml_doc(row) -> str:
     return yaml.safe_dump(d, sort_keys=True)
 
 
-def _branch_exists(repo_dir: str) -> bool:
-    return (
-        subprocess.run(
-            ["git", "-C", repo_dir, "rev-parse", "-q", "--verify",
-             "refs/heads/main"],
-            capture_output=True,
-        ).returncode
-        == 0
+def _branch_tip(repo_dir: str) -> str | None:
+    """The commit ``main`` points at, or None before the first import."""
+    out = subprocess.run(
+        ["git", "-C", repo_dir, "rev-parse", "-q", "--verify", "refs/heads/main"],
+        capture_output=True, text=True,
+    )
+    return out.stdout.strip() if out.returncode == 0 else None
+
+
+class _TipBlobs:
+    """Blob lookups in one fixed commit through one long-lived
+    ``git cat-file --batch``. Each answer is flushed before the next
+    request, so lookups interleave with rendering an import stream."""
+
+    def __init__(self, repo_dir: str, commit: str):
+        self.commit = commit
+        self.proc = subprocess.Popen(
+            ["git", "-C", repo_dir, "cat-file", "--batch"],
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE,
+        )
+
+    def get(self, path: str) -> bytes | None:
+        self.proc.stdin.write(f"{self.commit}:{path}\n".encode())
+        self.proc.stdin.flush()
+        header = self.proc.stdout.readline().split()
+        if header[-1] == b"missing":
+            return None
+        data = self.proc.stdout.read(int(header[2]))
+        self.proc.stdout.read(1)  # the newline after each object
+        return data
+
+    def close(self) -> None:
+        self.proc.stdin.close()
+        self.proc.wait()
+
+
+def _holds(doc: bytes | None, updated) -> bool:
+    """True when the issue YAML ``doc`` is a version at least as new as
+    ``updated``."""
+    import yaml
+    from datetime import datetime
+
+    return doc is not None and (
+        datetime.fromisoformat(yaml.safe_load(doc)["updated"]) >= updated
     )
 
 
-def _commit_stream(rows, continue_existing: bool = False) -> Iterator[bytes]:
-    """Render commit_log-ish rows as a git fast-import stream (inline
-    blobs, one commit per issue). continue_existing grafts the first commit
-    onto the branch tip (``from refs/heads/main^0``) so incremental sync
-    batches APPEND to the repo instead of fast-import refusing to rewrite
-    an existing branch."""
-    mark = 0
+def _commit_header(author: str, when: int, msg: bytes, graft: bool) -> bytes:
+    """One fast-import ``commit`` on main; ``graft`` parents it on the
+    branch tip (``from refs/heads/main^0``) so an incremental batch
+    APPENDS to the repo instead of fast-import refusing to rewrite an
+    existing branch. Later commits of one stream chain implicitly."""
+    return (
+        b"commit refs/heads/main\n"
+        + f"author {author} {when} +0000\n".encode()
+        + f"committer {author} {when} +0000\n".encode()
+        + f"data {len(msg)}\n".encode() + msg + b"\n"
+        + (b"from refs/heads/main^0\n" if graft else b"")
+    )
+
+
+def _inline(mode: str, path: str, data: bytes) -> bytes:
+    return f"M {mode} inline {path}\ndata {len(data)}\n".encode() + data + b"\n"
+
+
+def _import_stream(rows, tip: _TipBlobs | None, tally: dict) -> Iterator[bytes]:
+    """Render one repo's rows as a git fast-import stream with inline
+    blobs: one commit per issue row, in row order, then ONE commit of
+    mode-120000 entries for the symlink rows (rows with a ``link_path``)
+    — git's symlink representation is a blob whose content is the target
+    path, exactly what the reference's createSymbolicLink writes
+    (links.go:309-357). ``tally`` receives the commit and link counts.
+
+    On an existing branch (``tip`` given) the first commit grafts onto the
+    tip, and a replayed batch adds nothing: an issue row whose version the
+    tip already holds (its YAML there is at least as new) is not committed
+    again, and a symlink commit with no issue commit before it is dropped
+    when every link is already in place."""
+    links: list[tuple[str, bytes]] = []
     for r in rows:
-        mark += 1
-        author = _author_or_default(r["author"])
-        when = int(r["commit_ts"].timestamp())
+        if getattr(r, "link_path", None) is not None:
+            links.append((r["link_path"], r["target"].encode()))
+            continue
+        if tip is not None and _holds(tip.get(r["file_path"]), r["updated"]):
+            continue
         msg = (r["subject"] + "\n\n" + (r["body"] or "")).encode()
-        blob = _yaml_doc(r).encode()
-        yield b"commit refs/heads/main\n"
-        yield f"mark :{mark}\n".encode()
-        yield f"author {author} {when} +0000\n".encode()
-        yield f"committer {author} {when} +0000\n".encode()
-        yield f"data {len(msg)}\n".encode() + msg + b"\n"
-        if mark == 1 and continue_existing:
-            yield b"from refs/heads/main^0\n"
-        yield f"M 644 inline {r['file_path']}\n".encode()
-        yield f"data {len(blob)}\n".encode() + blob + b"\n"
+        yield _commit_header(
+            _author_or_default(r["author"]),
+            int(r["commit_ts"].timestamp()),
+            msg,
+            tip is not None and not tally["commits"],
+        )
+        yield _inline("644", r["file_path"], _yaml_doc(r).encode())
+        tally["commits"] += 1
+    graft = tip is not None and not tally["commits"]
+    if links and not (graft and all(tip.get(p) == t for p, t in links)):
+        msg = f"chore(links): materialize {len(links)} relationship links"
+        yield _commit_header(DEFAULT_AUTHOR, 0, msg.encode(), graft)
+        for path, target in links:
+            yield _inline("120000", path, target)
+        tally["links"] = len(links)
     yield b"done\n"
 
 
 def _commit_frame(issues: DataFrame) -> DataFrame:
-    """commit_log rows + the flat fields the YAML document needs, ordered
-    deterministically (commit_ts, key) — the order the reference produces
-    by syncing sorted keys (jira_builder.go:222-225 ORDER BY injection).
-    One projection per issue row, so each version of a key keeps its own
-    fields and commits exactly once."""
+    """commit_log rows + the flat fields the YAML document needs. One
+    projection per issue row, so each version of a key keeps its own
+    fields and commits exactly once. Writers commit in (commit_ts, key)
+    order — the order the reference produces by syncing sorted keys
+    (jira_builder.go:222-225 ORDER BY injection)."""
     return sinks.commit_log_rows(
         issues,
         "project_key",
@@ -129,25 +202,26 @@ def _commit_frame(issues: DataFrame) -> DataFrame:
         "issuetype",
         F.col("status.name").alias("status_name"),
         "updated",
-    ).orderBy("commit_ts", "key")
+    )
 
 
-def _fast_import_rows(rows, repo_dir: str) -> int:
-    """Feed one iterable of commit rows into one ``git fast-import``
-    against repo_dir (created on demand; appends when the branch exists).
-    Runs wherever it's called — driver or executor task."""
+def _import_rows(rows, repo_dir: str) -> tuple[int, int]:
+    """Feed one repo's rows into ONE ``git fast-import`` against repo_dir
+    (created on demand; appends when the branch exists), then sync the
+    working tree with one checkout. Runs wherever it's called — driver or
+    executor task. Returns (issue commits, symlinks)."""
     _ensure_repo(repo_dir)
-    cont = _branch_exists(repo_dir)
+    tally = {"commits": 0, "links": 0}
+    commit = _branch_tip(repo_dir)
     proc = subprocess.Popen(
         ["git", "-C", repo_dir, "fast-import", "--quiet", "--done"],
         stdin=subprocess.PIPE,
     )
-    n = 0
+    tip = None
     try:
-        for chunk in _commit_stream(rows, continue_existing=cont):
+        tip = _TipBlobs(repo_dir, commit) if commit else None
+        for chunk in _import_stream(rows, tip, tally):
             proc.stdin.write(chunk)
-            if chunk.startswith(b"commit "):
-                n += 1
         proc.stdin.close()
         rc = proc.wait()
         if rc != 0:
@@ -155,11 +229,13 @@ def _fast_import_rows(rows, repo_dir: str) -> int:
     finally:
         if proc.poll() is None:
             proc.kill()
+        if tip is not None:
+            tip.close()
     # fast-import writes refs/objects only; sync the working tree
     subprocess.run(
         ["git", "-C", repo_dir, "checkout", "-q", "-f", "main"], check=True
     )
-    return n
+    return tally["commits"], tally["links"]
 
 
 def materialize_fast_import(issues: DataFrame, repo_dir: str) -> int:
@@ -170,44 +246,67 @@ def materialize_fast_import(issues: DataFrame, repo_dir: str) -> int:
     layout; the whole corpus funnels through one driver-side pipe. For the
     reference's per-project repo layout at scale use
     ``materialize_fan_out`` (round-3 verdict weak #2)."""
-    frame = _commit_frame(issues)
-    return _fast_import_rows(frame.toLocalIterator(), repo_dir)
+    frame = _commit_frame(issues).orderBy("commit_ts", "key")
+    return _import_rows(frame.toLocalIterator(), repo_dir)[0]
 
 
-def materialize_fan_out(issues: DataFrame, repos_root: str) -> dict[str, int]:
-    """Per-project git fan-out — the scale shape of S8 (and the reference's
-    actual layout: one repo per project, README.md:53-73). The commit frame
-    is hash-partitioned by project_key and sorted (project, commit_ts, key)
-    within partitions; each executor task streams its projects' rows into
-    one ``git fast-import`` per project repo under
-    ``repos_root/<project_key>``. The driver never sees the rows — commit
-    materialization parallelizes across projects instead of funneling
-    through one pipe, and re-runs APPEND (branch-tip graft) so incremental
-    batches compose.
+def _link_frame(edges: DataFrame) -> DataFrame:
+    from jira_cdc_git_spark.operators.jira import symlink_rows
 
-    Requires ``repos_root`` to be reachable from executors (shared
-    filesystem — which a per-project-git deployment needs anyway).
-    Returns {project_key: n_commits} computed from the frame (one small
-    aggregate), raising if any executor import fails."""
-    frame = _commit_frame(issues)
-    counts = {
-        r["project_key"]: r["n"]
-        for r in frame.groupBy("project_key").agg(F.count("*").alias("n")).collect()
-    }
-    parted = frame.repartition("project_key").sortWithinPartitions(
-        "project_key", "commit_ts", "key"
+    return symlink_rows(edges).select("project_key", "link_path", "target")
+
+
+def _fan_out(rows: DataFrame, repos_root: str) -> dict[str, tuple[int, int]]:
+    """The per-project writer behind both fan-out calls: commit and/or
+    symlink rows are hash-partitioned by project_key and sorted within
+    partitions — issue rows (no link_path) first by (commit_ts, key), then
+    the links by path — and each executor task streams each of its
+    projects into ONE ``_import_rows`` under ``repos_root/<project_key>``.
+    The driver never sees the rows; the per-project (commits, links)
+    counts come back from the write job."""
+    order = [c for c in ("link_path", "commit_ts", "key", "target")
+             if c in rows.columns]
+    parted = rows.repartition("project_key").sortWithinPartitions(
+        "project_key", *order
     )
 
-    def _write(rows) -> None:
+    def _write(part):
         import itertools
 
         for project, group in itertools.groupby(
-            rows, key=lambda r: r["project_key"]
+            part, key=lambda r: r["project_key"]
         ):
-            _fast_import_rows(group, os.path.join(repos_root, project))
+            yield project, *_import_rows(group, os.path.join(repos_root, project))
 
-    parted.foreachPartition(_write)
-    return counts
+    return {p: (c, n) for p, c, n in parted.rdd.mapPartitions(_write).collect()}
+
+
+def materialize_fan_out(
+    issues: DataFrame, repos_root: str, edges: DataFrame | None = None
+) -> dict[str, int]:
+    """Per-project git fan-out — the scale shape of S8 (and the reference's
+    actual layout: one repo per project, README.md:53-73): one
+    ``git fast-import`` per project repo under ``repos_root/<project_key>``,
+    run inside executor tasks, so commit materialization parallelizes
+    across projects instead of funneling through one pipe. Later batches
+    APPEND (branch-tip graft) so incremental batches compose; a replayed
+    batch — say the re-run of a sync that failed after this write — adds
+    no commit for a version the branch already holds.
+
+    ``edges`` (an S9 edge frame) completes the reference's on-disk output
+    contract in the same import: after the project's issue commits, one
+    commit adds its relationship SYMLINK TREE — the reference links every
+    synced issue's relationships right after writing it (incremental.go
+    processIssue → links.CreateRelationshipLinks).
+
+    Requires ``repos_root`` to be reachable from executors (shared
+    filesystem — which a per-project-git deployment needs anyway).
+    Returns {project_key: n_issue_commits}, raising if any executor import
+    fails."""
+    rows = _commit_frame(issues)
+    if edges is not None:
+        rows = rows.unionByName(_link_frame(edges), allowMissingColumns=True)
+    return {p: c for p, (c, _n) in _fan_out(rows, repos_root).items() if c}
 
 
 def materialize_porcelain(issues: DataFrame, repo_dir: str) -> int:
@@ -216,7 +315,7 @@ def materialize_porcelain(issues: DataFrame, repo_dir: str) -> int:
     the issue's author/date. Small batches only."""
     _ensure_repo(repo_dir)
     n = 0
-    for r in _commit_frame(issues).toLocalIterator():
+    for r in _commit_frame(issues).orderBy("commit_ts", "key").toLocalIterator():
         path = os.path.join(repo_dir, r["file_path"])
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = path + ".tmp"
@@ -258,83 +357,14 @@ def git_log_subjects(repo_dir: str) -> list[str]:
     return [line for line in out.stdout.splitlines() if line]
 
 
-def _symlink_stream(rows, continue_existing: bool = False) -> Iterator[bytes]:
-    """Render symlink rows (link_path, target) as ONE fast-import commit
-    of mode-120000 entries — git's symlink representation is a blob
-    whose content is the target path, which is exactly what the
-    reference's createSymbolicLink writes (links.go:309-357)."""
-    n = 0
-    body: list[bytes] = []
-    for r in rows:
-        n += 1
-        target = r["target"].encode()
-        body.append(f"M 120000 inline {r['link_path']}\n".encode())
-        body.append(f"data {len(target)}\n".encode() + target + b"\n")
-    if n:
-        msg = f"chore(links): materialize {n} relationship links".encode()
-        yield b"commit refs/heads/main\n"
-        yield f"author {DEFAULT_AUTHOR} 0 +0000\n".encode()
-        yield f"committer {DEFAULT_AUTHOR} 0 +0000\n".encode()
-        yield f"data {len(msg)}\n".encode() + msg + b"\n"
-        if continue_existing:
-            yield b"from refs/heads/main^0\n"
-        yield from body
-    yield b"done\n"
-
-
-def _symlink_import_rows(rows, repo_dir: str) -> None:
-    _ensure_repo(repo_dir)
-    cont = _branch_exists(repo_dir)
-    proc = subprocess.Popen(
-        ["git", "-C", repo_dir, "fast-import", "--quiet", "--done"],
-        stdin=subprocess.PIPE,
-    )
-    try:
-        for chunk in _symlink_stream(rows, continue_existing=cont):
-            proc.stdin.write(chunk)
-        proc.stdin.close()
-        rc = proc.wait()
-        if rc != 0:
-            raise RuntimeError(f"git fast-import failed rc={rc}")
-    finally:
-        if proc.poll() is None:
-            proc.kill()
-    subprocess.run(
-        ["git", "-C", repo_dir, "checkout", "-q", "-f", "main"], check=True
-    )
-
-
 def materialize_symlinks_fan_out(
     edges: DataFrame, repos_root: str
 ) -> dict[str, int]:
-    """Complete the reference's on-disk output contract (README.md:53-73):
-    the relationship SYMLINK TREE, one commit per project repo, fanned
-    out per project inside executors like materialize_fan_out. Each
+    """The links-only call of the fan-out writer: the relationship
+    SYMLINK TREE (README.md:53-73), one commit per project repo. Each
     edge renders through operators/jira.symlink_rows into a mode-120000
     entry, so after checkout `projects/{pk}/relationships/...` holds
-    real symlinks resolving into `issues/`. Re-runs graft onto the
-    branch tip (idempotent content: re-adding the same link rewrites
-    the same path). Returns {project_key: n_links}."""
-    from jira_cdc_git_spark.operators.jira import symlink_rows
-
-    links = symlink_rows(edges)
-    counts = {
-        r["project_key"]: r["n"]
-        for r in links.groupBy("project_key")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    parted = links.repartition("project_key").sortWithinPartitions(
-        "project_key", "link_path"
-    )
-
-    def _write(rows) -> None:
-        import itertools
-
-        for project, group in itertools.groupby(
-            rows, key=lambda r: r["project_key"]
-        ):
-            _symlink_import_rows(group, os.path.join(repos_root, project))
-
-    parted.foreachPartition(_write)
-    return counts
+    real symlinks resolving into `issues/`. The commit grafts onto the
+    branch tip; a project whose links are all in place already gets no
+    commit. Returns {project_key: n_links written}."""
+    return {p: n for p, (_c, n) in _fan_out(_link_frame(edges), repos_root).items()}

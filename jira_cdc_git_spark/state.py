@@ -114,7 +114,9 @@ class SyncStateStore:
     def _version_path(self, v: int) -> str:
         return os.path.join(self.state_dir, f"v_{v:05d}")
 
-    def _flip(self, v: int) -> None:
+    def commit(self, v: int) -> None:
+        """Make version ``v`` current: the atomic ``_CURRENT`` flip, the
+        store's single commit point."""
         tmp = self._pointer() + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(v))
@@ -139,7 +141,7 @@ class SyncStateStore:
             .partitionBy("project_key")
             .parquet(self._version_path(v))
         )
-        self._flip(v)
+        self.commit(v)
         return v
 
     def _link_partition(self, src: str, dst: str) -> None:
@@ -157,7 +159,7 @@ class SyncStateStore:
     def restore(self, version: int) -> None:
         if not os.path.isdir(self._version_path(version)):
             raise FileNotFoundError(f"no state version {version}")
-        self._flip(version)
+        self.commit(version)
 
     def vacuum(self, keep: int = 5) -> None:
         keep_from = max(1, self.current_version() - keep + 1)
@@ -254,8 +256,25 @@ class SyncStateStore:
 
     def merge(self, spark: SparkSession, synced: DataFrame, now: datetime) -> int:
         """Upsert one batch of synced issues into state (updateIssueState,
-        manager.go:329-371): matched rows bump sync_count and refresh
-        watermark/checksum; unmatched insert with sync_count=1.
+        manager.go:329-371): ``stage_merge`` writes the next version, then
+        ``commit`` flips ``_CURRENT`` to it. Returns the new version.
+
+        The flip is the single commit point: a crash before it leaves the
+        current version (and every reader) untouched, and the next merge
+        overwrites the staged directory. incremental_sync_batch relies on
+        this to stage the MERGE concurrently with its sinks and commit
+        only once every write has succeeded."""
+        v = self.stage_merge(spark, synced, now)
+        self.commit(v)
+        return v
+
+    def stage_merge(
+        self, spark: SparkSession, synced: DataFrame, now: datetime
+    ) -> int:
+        """Write the merged state as version current+1 WITHOUT flipping
+        ``_CURRENT`` to it; returns that version. Matched rows bump
+        sync_count and refresh watermark/checksum; unmatched insert with
+        sync_count=1.
 
         Join-based MERGE rewrite (plain parquet has no MERGE INTO): state
         FULL OUTER JOIN batch on key → coalesce per column. Deterministic
@@ -321,7 +340,6 @@ class SyncStateStore:
                         os.path.join(prev_path, name),
                         os.path.join(self._version_path(v), name),
                     )
-        self._flip(v)
         return v
 
     # -- C6 operation log / W4 history cap --------------------------------

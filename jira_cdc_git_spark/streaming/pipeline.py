@@ -9,11 +9,20 @@ map onto ONE ``foreachBatch`` body here, shared by both execution modes:
   ``--incremental``; schedule via external cron per C9).
 * continuous micro-batches — ``processingTime`` trigger for a live feed.
 
-Exactly-once across the four writes (SURVEY §7 hardness item 1) is handled
-the reference's way, made rigorous: every write is idempotent — issues
-partition overwrite by key-derived path, commit ids deterministic
-(sha(key,updated)), state MERGE keyed by issue — so at-least-once delivery
-from checkpoint replay converges (C4: re-sync is safe by design).
+Exactly-once across the writes (SURVEY §7 hardness item 1) follows the
+Structured Streaming recipe: ONE atomic commit point plus sinks that a
+replayed batch cannot double. The commit point is the state store's
+``_CURRENT`` flip (``SyncStateStore.commit``): the sinks, the git fan-out
+and a STAGED state version run concurrently as one fork/join, and the
+flip happens only once every branch succeeded. When a branch fails, the
+batch takes back what its append sinks wrote (issue deltas, commit log,
+edges), state and history stay as they were, and the git writer's
+commits stay — a replay of them is a no-op, because the writer skips
+every version a repo already holds. So the re-run syncs the same change
+set and every sink ends as after one clean run (C4: re-sync is safe by
+design). A process that dies inside the write phase gets no such
+clean-up: its replay converges state, the latest-wins issue view and
+git, but can append its commit-log and edge rows a second time.
 
 A streaming windowed aggregation over the events feed (tumbling 1h with
 watermark) shares its expressions with the batch operator
@@ -23,6 +32,7 @@ watermark) shares its expressions with the batch operator
 from __future__ import annotations
 
 import os
+import shutil
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -185,6 +195,48 @@ def _drain_stateful(
     )
 
 
+def _files(root: str) -> set[str] | None:
+    """Every file under ``root``, or None when it does not exist."""
+    if not os.path.isdir(root):
+        return None
+    return {os.path.join(d, f) for d, _dirs, fs in os.walk(root) for f in fs}
+
+
+def _drop_new_files(root: str, before: set[str] | None) -> None:
+    """Take back appends to the table at ``root``: remove every file not
+    in ``before`` (its earlier ``_files`` listing), or the whole table
+    when it did not exist then."""
+    if before is None:
+        shutil.rmtree(root, ignore_errors=True)
+        return
+    for path in (_files(root) or set()) - before:
+        os.remove(path)
+
+
+def _fork_join(spark: SparkSession, branches: list) -> list:
+    """Run the zero-argument ``branches`` concurrently, one thread each,
+    and return their results in order. Each thread inherits the caller's
+    Spark local properties (``inheritable_thread_target``), so every job a
+    branch launches stays in the caller's job group and a group cancel
+    (scheduling.run_scheduled's Replace policy) reaches it. Every branch is
+    joined before the first failure, in branch order, is raised; the
+    other failures ride along as notes on it."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(b)) for b in branches
+        ]
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if errors:
+        for e in errors[1:]:
+            errors[0].add_note(f"another write branch also failed: {e!r}")
+        raise errors[0]
+    return [f.result() for f in futures]
+
+
 def incremental_sync_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -199,6 +251,17 @@ def incremental_sync_batch(
     """The shared per-batch body (batch CLI path and foreachBatch both call
     this). Returns the A4-style result counts.
 
+    The write phase is one fork/join over the persisted change set: the
+    issue deltas, the commit log, the edges, the git fan-out and a STAGED
+    state MERGE (``SyncStateStore.stage_merge``) run concurrently. Only
+    when every branch has succeeded does ``SyncStateStore.commit`` flip
+    ``_CURRENT`` to the new state version — the batch's single commit
+    point — followed by the history record. A failed branch raises after
+    the others finish; the batch's appends are removed and the current
+    state version and the history stay unchanged, so the re-run syncs the
+    same change set again and every sink ends as after one clean run
+    (see the module docstring).
+
     dry_run (C8): compute the change set and counts, write NOTHING —
     mirrors incremental.go:404-465 (fetch-only, fabricated paths).
 
@@ -207,14 +270,15 @@ def incremental_sync_batch(
     the full per-batch write set of the reference's sync loop.
 
     git_repos_root: when set, the change set also materializes as real git
-    commits, one repo per project (S8 fan-out, sinks_git.materialize_fan_out)
-    — the reference's complete output contract in one batch body.
+    commits plus the relationship symlink tree, one repo per project (S8
+    fan-out, sinks_git.materialize_fan_out) — the reference's complete
+    output contract in one batch body.
     """
     now = now or datetime.now(timezone.utc).replace(tzinfo=None)
     start = now
     changes = store.filter_changes(spark, batch, force=force)
-    # one pass over the (small) change set feeds three sinks + the MERGE —
-    # persist instead of recomputing the filter join four times
+    # one pass over the (small) change set feeds every write branch —
+    # persist instead of recomputing the filter join once per branch
     changes.persist()
     try:
         # A10/C12 progress metrics from the one action that fills the cache
@@ -232,8 +296,10 @@ def incremental_sync_batch(
         ).first()
         if stats["versions"] < stats["rows"]:
             # dedup only when needed: its shuffle spreads the change set
-            # over more partitions, and so over more sink files
+            # over more partitions, and so over more sink files. Fill its
+            # cache before the fork so the branches don't each compute it.
             deduped = changes.dropDuplicates(["key", "updated"]).persist()
+            deduped.count()
             changes.unpersist()
             changes = deduped
         n = stats["versions"]
@@ -246,30 +312,41 @@ def incremental_sync_batch(
             )
             return counts
         issue_cols = changes.drop("change_type")
-        sinks.append_issue_deltas(issue_cols, f"{out_root}/issues")
-        sinks.append_commit_log(issue_cols, f"{out_root}/commit_log")
-        if edges_dir is not None:
+        issues_dir, log_dir = f"{out_root}/issues", f"{out_root}/commit_log"
+        appended = [issues_dir, log_dir]
+        edges = None
+        if edges_dir is not None or git_repos_root is not None:
             from jira_cdc_git_spark.operators.jira import link_edges_frame
 
-            sinks.write_edges(
-                link_edges_frame(issue_cols), edges_dir, mode="append"
+            edges = link_edges_frame(issue_cols)
+        branches = [
+            lambda: sinks.append_issue_deltas(issue_cols, issues_dir),
+            lambda: sinks.append_commit_log(issue_cols, log_dir),
+        ]
+        if edges_dir is not None:
+            appended.append(edges_dir)
+            branches.append(
+                lambda: sinks.write_edges(edges, edges_dir, mode="append")
             )
         if git_repos_root is not None:
-            from jira_cdc_git_spark.operators.jira import link_edges_frame
-            from jira_cdc_git_spark.sinks_git import (
-                materialize_fan_out,
-                materialize_symlinks_fan_out,
-            )
+            from jira_cdc_git_spark import sinks_git
 
-            materialize_fan_out(issue_cols, git_repos_root)
-            # the reference links every synced issue's relationships
-            # right after writing it (incremental.go processIssue →
-            # links.CreateRelationshipLinks) — one symlink commit per
-            # project per batch carries the change set's edges
-            materialize_symlinks_fan_out(
-                link_edges_frame(issue_cols), git_repos_root
+            branches.append(
+                lambda: sinks_git.materialize_fan_out(
+                    issue_cols, git_repos_root, edges=edges
+                )
             )
-        store.merge(spark, issue_cols, now)
+        branches.append(lambda: store.stage_merge(spark, issue_cols, now))
+        before = {p: _files(p) for p in appended}
+        try:
+            staged = _fork_join(spark, branches)[-1]
+        except Exception:
+            # every branch has stopped: take back this batch's appends so
+            # that its re-run writes them once
+            for p, files in before.items():
+                _drop_new_files(p, files)
+            raise
+        store.commit(staged)
         store.record_operation(
             spark, "incremental", "completed", start, now, counts
         )

@@ -139,24 +139,25 @@ def test_fan_out_rerun_appends(spark, sf_dir, tmp_path):
 
 
 def test_symlink_tree_materializes(spark, sf_dir, tmp_path):
-    """The reference's full on-disk contract (README.md:53-73): after
-    issue materialization + symlink fan-out, each project repo holds
-    REAL symlinks under projects/{pk}/relationships/... whose targets
-    resolve to existing issue YAML files, with the reference's exact
-    path algebra (links.go:241-307)."""
+    """The reference's full on-disk contract (README.md:53-73): after one
+    fan-out of the issues together with their edges, each project repo
+    holds REAL symlinks under projects/{pk}/relationships/... whose
+    targets resolve to existing issue YAML files, with the reference's
+    exact path algebra (links.go:241-307)."""
     import os
 
     from jira_cdc_git_spark.operators.jira import link_edges_frame
 
     root = str(tmp_path / "repos")
     df = FX.issues(spark, sf_dir).orderBy("key").limit(400).cache()
-    sinks_git.materialize_fan_out(df, root)
     edges = link_edges_frame(df)
-    counts = sinks_git.materialize_symlinks_fan_out(edges, root)
-    assert sum(counts.values()) == edges.count() > 0
+    counts = sinks_git.materialize_fan_out(df, root, edges=edges)
+    assert sum(counts.values()) == df.count()
+    projects = {r["project_key"] for r in edges.select("project_key").distinct().collect()}
+    assert projects <= set(counts)
 
     checked = broken = 0
-    for project in counts:
+    for project in projects:
         repo = os.path.join(root, project)
         rel_root = os.path.join(repo, "projects", project, "relationships")
         assert os.path.isdir(rel_root)
@@ -174,6 +175,7 @@ def test_symlink_tree_materializes(spark, sf_dir, tmp_path):
                     # (J2's PROJ-99997/99998/99999 ghosts) — and targets
                     # in OTHER projects' repos; both dangle here
                     broken += 1
+    assert checked + broken == edges.count() > 0
     assert checked > 0
     # epic links: exact reference path shape for a known-good edge
     some = (
@@ -185,6 +187,156 @@ def test_symlink_tree_materializes(spark, sf_dir, tmp_path):
     )
     assert os.path.islink(link)
     assert os.readlink(link) == f"../../issues/{some['dst_key']}.yaml"
+    # one stream per project: the issue commits, then ONE symlink commit
+    for project, n in counts.items():
+        subjects = sinks_git.git_log_subjects(os.path.join(root, project))
+        links = [s for s in subjects if s.startswith("chore(links):")]
+        assert len(subjects) == n + len(links)
+        assert len(links) == (project in projects)
+        assert not links or subjects[-1] == links[0]
+    df.unpersist()
+
+
+#: ``main`` of each project repo after the two batches of
+#: test_fan_out_history_is_pinned, as written by the earlier writer (one
+#: fast-import for the issue commits, a second for the symlink commit).
+PINNED_MAIN = {
+    "BENCH": "a4d45a3803205174f26d6d30c24ba918743789be",
+    "CONC": "c8929d2a2fddda9e3247a9d9fa4fd862a50e8c20",
+    "MEM": "a08ef21e141a231cb1d68ef6a1a9cb65c7497c20",
+    "MY-PROJECT": "440043e1c6488c27c33deaa4d461ebccca372080",
+    "PROJ": "aadefef5611443e56fe81e0abed6a23550e2beb6",
+    "RHOAIENG": "b4c9dc50a8ab797b3b5d21266ddb9af7f2676950",
+}
+
+
+def test_fan_out_history_is_pinned(spark, sf_dir, tmp_path):
+    """Two incremental fan-out batches with edges — the second adds new
+    issues and a new version of three issues per project — reproduce the
+    pinned commit SHAs of every project repo byte for byte: same commits,
+    trees, parents, authors, dates and messages."""
+    import os
+
+    from pyspark.sql import Window
+
+    from jira_cdc_git_spark.operators.jira import link_edges_frame
+
+    w = Window.partitionBy("project_key").orderBy("key")
+    ranked = FX.issues(spark, sf_dir).withColumn("__rn", F.row_number().over(w))
+    first = ranked.filter(F.col("__rn") <= 30).drop("__rn")
+    edited = (
+        ranked.filter(F.col("__rn") <= 3).drop("__rn")
+        .withColumn("updated", F.col("updated") + F.expr("INTERVAL 1 DAY"))
+        .withColumn("summary", F.concat(F.col("summary"), F.lit(" (edited)")))
+    )
+    second = (
+        ranked.filter((F.col("__rn") > 30) & (F.col("__rn") <= 50))
+        .drop("__rn")
+        .unionByName(edited)
+    )
+    root = str(tmp_path / "repos")
+    for batch in (first, second):
+        batch = batch.cache()
+        sinks_git.materialize_fan_out(batch, root, edges=link_edges_frame(batch))
+        batch.unpersist()
+    got = {
+        p: subprocess.run(
+            ["git", "-C", os.path.join(root, p), "rev-parse", "main"],
+            check=True, capture_output=True, text=True,
+        ).stdout.strip()
+        for p in sorted(os.listdir(root))
+    }
+    assert got == PINNED_MAIN
+
+
+@pytest.mark.parametrize("jvm_first", [False, True], ids=["own_jvm", "plain_jvm_first"])
+def test_fan_out_from_a_foreign_cwd(sf_dir, tmp_path, jvm_first):
+    """The fan-out writer runs in Python workers, which must import the
+    package whatever the driver's cwd and without PYTHONPATH: a fresh
+    process started in an empty directory runs a small fan-out, whether
+    get_spark starts the JVM or a plain session started it first."""
+    import os
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    plain = (
+        "from pyspark.sql import SparkSession\n"
+        "SparkSession.builder.master('local[1]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()"
+    ) if jvm_first else ""
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from jira_cdc_git_spark import fixtures as FX, sinks_git
+from jira_cdc_git_spark.session import get_spark
+{plain}
+spark = get_spark(app_name="foreign-cwd", cpus=1)
+df = FX.issues(spark, {sf_dir!r}).orderBy("key").limit(5)
+print("commits", sum(sinks_git.materialize_fan_out(df, "repos").values()))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "PYSPARK_SUBMIT_ARGS", "SPARK_GRAFT_MASTER")}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "commits 5" in proc.stdout.splitlines()
+    assert len(os.listdir(tmp_path / "repos")) >= 1
+
+
+def test_links_only_fan_out_grafts_and_counts(spark, sf_dir, tmp_path):
+    """materialize_symlinks_fan_out, the links-only call of the fan-out
+    writer, on repos an issue fan-out created: one links commit per
+    project, grafted onto the branch tip, and each project's link count
+    returned. A second call with the same edges finds every link in place
+    and commits nothing."""
+    import os
+
+    from jira_cdc_git_spark.operators.jira import link_edges_frame, symlink_rows
+
+    root = str(tmp_path / "repos")
+    df = FX.issues(spark, sf_dir).orderBy("key").limit(400).cache()
+    edges = link_edges_frame(df).cache()
+    commits = sinks_git.materialize_fan_out(df, root)
+
+    def mains():
+        return {
+            p: subprocess.run(
+                ["git", "-C", os.path.join(root, p), "rev-parse", "main"],
+                check=True, capture_output=True, text=True,
+            ).stdout.strip()
+            for p in sorted(os.listdir(root))
+        }
+
+    before = mains()
+    links = sinks_git.materialize_symlinks_fan_out(edges, root)
+    want = {
+        r["project_key"]: r["count"]
+        for r in symlink_rows(edges).groupBy("project_key").count().collect()
+    }
+    assert links == want and sum(want.values()) > 0
+    assert set(want) <= set(commits)
+    after = mains()
+    for p, n in commits.items():
+        repo = os.path.join(root, p)
+        subjects = sinks_git.git_log_subjects(repo)
+        if p not in want:
+            assert len(subjects) == n and after[p] == before[p]
+            continue
+        assert len(subjects) == n + 1
+        assert subjects[-1] == f"chore(links): materialize {want[p]} relationship links"
+        parent = subprocess.run(
+            ["git", "-C", repo, "rev-parse", "main^"],
+            check=True, capture_output=True, text=True,
+        ).stdout.strip()
+        assert parent == before[p]
+    assert sinks_git.materialize_symlinks_fan_out(edges, root) == dict.fromkeys(want, 0)
+    assert mains() == after
+    edges.unpersist()
     df.unpersist()
 
 

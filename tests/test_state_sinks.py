@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from jira_cdc_git_spark import fixtures as FX
-from jira_cdc_git_spark import sinks
+from jira_cdc_git_spark import sinks, sinks_git
 from jira_cdc_git_spark.state import HISTORY_CAP, SyncStateStore
 from jira_cdc_git_spark.streaming.pipeline import incremental_sync_batch
 
@@ -300,3 +300,154 @@ def test_exact_redelivery_syncs_and_commits_once(store, spark, issues, tmp_path)
     subjects = sinks_git.git_log_subjects(os.path.join(repos, project))
     assert sum(key in s for s in subjects) == 2  # the first sync + this one
     one.unpersist()
+
+
+def _job_ids(spark):
+    """Every job the status store knows, once the listener bus drained."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    it = jsc.statusStore().jobsList(None).iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next().jobId())
+    return ids
+
+
+def test_sync_jobs_stay_in_caller_job_group(store, spark, issues, tmp_path):
+    """The write phase runs on worker threads, yet every job one sync
+    launches stays in the caller's job group — the group that
+    scheduling.run_scheduled's Replace policy cancels."""
+    sc = spark.sparkContext
+    before = _job_ids(spark)
+    sc.setJobGroup("g", "job-group test")
+    try:
+        r = incremental_sync_batch(
+            spark,
+            issues.orderBy("key").limit(40),
+            store,
+            str(tmp_path / "out"),
+            now=datetime(2030, 1, 1),
+            edges_dir=str(tmp_path / "out" / "edges"),
+            git_repos_root=str(tmp_path / "repos"),
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert r["total"] == 40
+    launched = _job_ids(spark) - before
+    assert launched
+    assert launched <= set(sc.statusTracker().getJobIdsForGroup("g"))
+
+
+def _sync_twice(spark, issues, store, out, repos, fault=None):
+    """A sync of 20 issues, then one of 20 new issues plus a newer version
+    of 5 synced ones. With ``fault`` (the write branch to fail), the
+    second sync first runs with that branch raising — checked to leave
+    state and history as they were — and then again without the fault.
+    Returns every table and repo the syncs leave behind."""
+    import os
+    import subprocess
+    import threading
+
+    edges = f"{out}/edges"
+    batch = issues.orderBy("key").limit(40)
+    first = batch.limit(20)
+    edited = (
+        first.limit(5)
+        .withColumn("updated", F.lit(datetime(2030, 1, 1, 12)))
+        .withColumn("summary", F.concat("summary", F.lit(" (edited)")))
+    )
+    second = batch.unionByName(edited)
+    incremental_sync_batch(spark, first, store, out, now=datetime(2030, 1, 1),
+                           edges_dir=edges, git_repos_root=repos)
+    now = datetime(2030, 1, 2)
+    if fault is not None:
+        version = store.current_version()
+        state_before = _rows(store.load(spark))
+        hist_before = _rows(store.history(spark))
+        finished, lock = set(), threading.Lock()
+
+        def tracked(name, fn):
+            def run(*a, **kw):
+                res = fn(*a, **kw)
+                with lock:
+                    finished.add(name)
+                return res
+
+            return run
+
+        def boom(*_a, **_kw):
+            raise RuntimeError(f"injected {fault} failure")
+
+        with pytest.MonkeyPatch.context() as m:
+            for name, (owner, attr) in _BRANCHES.items():
+                fn = getattr(owner, attr)
+                m.setattr(owner, attr, boom if name == fault else tracked(name, fn))
+            with pytest.raises(RuntimeError, match="injected") as err:
+                incremental_sync_batch(spark, second, store, out, now=now,
+                                       edges_dir=edges, git_repos_root=repos)
+            with lock:
+                at_raise = set(finished)
+        assert err.value.args[0] == f"injected {fault} failure"
+        assert at_raise == set(_BRANCHES) - {fault}
+        # the staged version, if written, was never committed
+        assert store.current_version() == version
+        assert _rows(store.load(spark)) == state_before
+        assert _rows(store.history(spark)) == hist_before
+    r = incremental_sync_batch(spark, second, store, out, now=now,
+                               edges_dir=edges, git_repos_root=repos)
+    assert (r["total"], r["successful"], r["new"]) == (25, 25, 20)
+    assert store.current_version() == 2
+    return {
+        "state": _rows(store.load(spark)),
+        "history": _rows(store.history(spark)),
+        "issues": _rows(spark.read.parquet(f"{out}/issues")),
+        "commit_log": _rows(sinks.read_commit_log(spark, f"{out}/commit_log")),
+        "edges": _rows(spark.read.parquet(edges)),
+        "git": {
+            p: subprocess.run(
+                ["git", "-C", os.path.join(repos, p), "rev-parse", "main"],
+                check=True, capture_output=True, text=True,
+            ).stdout.strip()
+            for p in sorted(os.listdir(repos))
+        },
+    }
+
+
+def _rows(df):
+    return sorted(df.collect(), key=repr)
+
+
+#: every write branch of one sync with edges and git: name → (owner, attr)
+_BRANCHES = {
+    "issues": (sinks, "append_issue_deltas"),
+    "commit_log": (sinks, "append_commit_log"),
+    "edges": (sinks, "write_edges"),
+    "git": (sinks_git, "materialize_fan_out"),
+    "stage": (SyncStateStore, "stage_merge"),
+}
+
+
+@pytest.fixture(scope="module")
+def clean_views(spark, issues, tmp_path_factory):
+    root = tmp_path_factory.mktemp("clean")
+    return _sync_twice(spark, issues, SyncStateStore(str(root / "state")),
+                       str(root / "out"), str(root / "repos"))
+
+
+@pytest.mark.parametrize("fault", list(_BRANCHES))
+def test_failed_write_branch_leaves_state_and_history(
+    store, spark, issues, tmp_path, fault, clean_views
+):
+    """Crash injection in the concurrent write phase: one branch raises.
+    The sync raises only after every other branch has finished, and the
+    ``_CURRENT`` flip never happens (state version and history
+    unchanged). A re-run without the fault syncs the same change set, and
+    every sink — state, history, the issue deltas, commit log and edge
+    rows as stored, and each project repo's ``main`` — ends exactly as
+    after a run that never failed: what the failed run wrote is not
+    written twice."""
+    views = _sync_twice(spark, issues, store, str(tmp_path / "out"),
+                        str(tmp_path / "repos"), fault=fault)
+    for view, rows in clean_views.items():
+        assert views[view] == rows, view
+    assert views["commit_log"] and views["edges"] and views["git"]
